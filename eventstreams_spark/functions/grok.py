@@ -1,9 +1,13 @@
 """Grok pattern support (Logstash `grok` filter equivalent, SURVEY §2.3 P9).
 
-A grok expression like ``src%{NUMBER:num}`` compiles to a Java-regex
-with named groups; extraction is then plain ``regexp_extract`` —
-JVM-side, codegen'd, no Python in the hot path. Pattern library is the
-standard public grok core set (re-expressed, not copied).
+A grok expression like ``src%{NUMBER:num}`` compiles to a Java regex
+with one capture group per field. Extraction matches that regex ONCE
+per row: a single ``regexp_replace`` rewrites the value to its captured
+groups and a ``split`` turns them into one ``array<string>``, exactly
+equal to per-field ``regexp_extract`` (first match, ``""`` for no match
+or an absent group, NULL for NULL). JVM-side, codegen'd, no Python in
+the hot path. Pattern library is the standard public grok core set
+(re-expressed, not copied).
 """
 
 from __future__ import annotations
@@ -115,8 +119,39 @@ def grok_to_regex(expr: str) -> tuple[str, list[str]]:
     return expand(expr, 0), fields
 
 
-def grok_extract(col: Column | str, expr: str) -> dict[str, Column]:
-    """Extract grok fields from a string column as {field: Column}."""
+#: Separator of the rewritten groups. A value that already holds it
+#: could not be split back apart, so such rows take the exact
+#: per-field ``regexp_extract`` branch instead.
+_SEP = "\u0001"
+
+
+def grok_parse(col: Column | str, expr: str) -> tuple[Column, list[str]]:
+    """(array<string> of the captured fields, field names), one regex
+    match per row.
+
+    ``^(?s:.*?)(?:R)(?s:.*)$`` matches where ``R`` first matches (the
+    lazy prefix tries start positions left to right, like ``find``) and
+    the rewrite keeps only ``SEP g1 … SEP gn``; an absent group
+    rewrites to ``""``. A row with no match is left as is, so ``n``
+    padding separators are appended and elements ``2..n+1`` of the
+    split are the fields in both cases: ``""`` each for no match.
+    """
     regex, fields = grok_to_regex(expr)
     c = F.col(col) if isinstance(col, str) else col
-    return {f: F.regexp_extract(c, regex, i + 1) for i, f in enumerate(fields)}
+    n = len(fields)
+    groups = "".join(f"{_SEP}${i}" for i in range(1, n + 1))
+    rewritten = F.regexp_replace(c, f"^(?s:.*?)(?:{regex})(?s:.*)$", groups)
+    parts = F.slice(F.split(F.concat(rewritten, F.lit(_SEP * n)), _SEP, -1), 2, n)
+    exact = F.array(*[F.regexp_extract(c, regex, i) for i in range(1, n + 1)])
+    return F.when(c.contains(_SEP), exact).otherwise(parts), fields
+
+
+def grok_extract(col: Column | str, expr: str) -> dict[str, Column]:
+    """Extract grok fields from a string column as {field: Column}.
+
+    Fields selected in one projection share one match (subexpression
+    elimination); to read them across several operators, make
+    :func:`grok_parse`'s array a column first, as the ``grok``
+    pipeline step does."""
+    parts, fields = grok_parse(col, expr)
+    return {f: parts[i] for i, f in enumerate(fields)}

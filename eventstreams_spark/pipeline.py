@@ -35,7 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.grok import grok_extract
+from .functions.grok import grok_parse
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -53,10 +53,15 @@ def _tag_dlq(df: DataFrame, cond, reason) -> DataFrame:
 def split_dead_letters(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(healthy, dead) frames from a chain run with dead_letter steps.
 
-    Both are filters over the SAME lineage — at scale write them in one
-    pass via foreachBatch (stream) or persist the parsed frame (batch);
-    the DLQ side is typically a tiny fraction so the double scan is
-    also acceptable and keeps each output a single Catalyst plan.
+    Both are filters over the SAME lineage, so each output is one
+    Catalyst plan and each re-reads and re-parses the source. Measured
+    on the 60k-line, 1 %-dead weblog ingest (grok → date → translate →
+    deadletter, 2 task threads, 4-core box): the DLQ query alone takes
+    1.30 s and the healthy one 2.05 s; as the two concurrent queries
+    of ``cmd_run`` they take 2.92 s. One foreachBatch query that
+    persists each micro-batch and writes both took 2.53 s, but its
+    writes are at-least-once on batch retry where the file sink's log
+    is exactly-once (SCALE.md §28).
     """
     if DLQ_COL not in df.columns:
         return df, df.limit(0)
@@ -157,10 +162,17 @@ def _prune(keep: list[str]) -> Transform:
 
 @step("grok")
 def _grok(source: str, pattern: str, remove_source: bool = False) -> Transform:
-    """Grok-extract named fields from a string column (P9)."""
+    """Grok-extract named fields from a string column (P9).
+
+    The parsed array is its own column, so the plan matches the regex
+    once per row however many fields read it (a filter on a field is
+    pushed below and re-matches once)."""
+    tmp = "_grok_fields"
+
     def t(df: DataFrame) -> DataFrame:
-        for fname, col in grok_extract(source, pattern).items():
-            df = df.withColumn(fname, col)
+        parts, fields = grok_parse(source, pattern)
+        df = df.withColumn(tmp, parts)
+        df = df.withColumns({f: F.col(tmp)[i] for i, f in enumerate(fields)}).drop(tmp)
         return df.drop(source) if remove_source else df
 
     return t

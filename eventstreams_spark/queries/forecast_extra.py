@@ -884,7 +884,7 @@ def matrix_profile_mass_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the quadratic certifier is the bounded part (217² pairs
     per channel on the pinned slice). When to ship which path is
-    MEASURED, not assumed (SCALE.md §16, tools/exp_mass_scaling.py):
+    MEASURED, not assumed (SCALE.md §16):
     MASS's O(n log n)-per-window cost is independent of m, so it wins
     for LONG windows (≥7× faster at m=512) while the BLAS/zip_with
     quadratic form stays faster for short windows like this m=24 —

@@ -139,10 +139,10 @@ def clone_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grok_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grok field extraction: 'src%{INT:src_num}' → regexp_extract.
+    """Grok field extraction: 'src%{INT:src_num}' via the grok kernel.
 
     Uses the grok pattern compiler (functions/grok.py); the extraction
-    itself is a codegen'd JVM regex — no Python per row.
+    itself is one codegen'd JVM regex match per row — no Python.
     """
     docs = load_table(spark, sf_dir, "documents")
     fields = _grok_extract(F.col("source"), "src%{INT:src_num}")
@@ -570,13 +570,9 @@ def grok_apache_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction regex.
 
     Scale: pure Column exprs end to end — one codegen'd projection
-    (concat + 4 regexp_extract) and one two-phase agg, no Python, no
-    shuffle beyond the final 15-group rollup.
+    (concat + one grok match per line) and one two-phase agg, no
+    Python, no shuffle beyond the final 15-group rollup.
     """
-    from ..functions.grok import grok_to_regex
-
-    regex, fields = grok_to_regex("%{COMBINEDAPACHELOG}")
-    g = {f: i + 1 for i, f in enumerate(fields)}
     ev = load_table(spark, sf_dir, "events")
     verb = (
         F.when(F.col("event_type") == "purchase", "POST")
@@ -604,11 +600,12 @@ def grok_apache_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 7).cast("string"),
         F.lit('"'),
     )
+    g = _grok_extract(line, "%{COMBINEDAPACHELOG}")
     parsed = ev.select(
-        F.regexp_extract(line, regex, g["verb"]).alias("verb"),
-        F.regexp_extract(line, regex, g["response"]).cast("long").alias("response"),
-        F.regexp_extract(line, regex, g["bytes"]).cast("long").alias("bytes"),
-        F.regexp_extract(line, regex, g["clientip"]).alias("clientip"),
+        g["verb"].alias("verb"),
+        g["response"].cast("long").alias("response"),
+        g["bytes"].cast("long").alias("bytes"),
+        g["clientip"].alias("clientip"),
     )
     return (
         parsed.groupBy("verb", "response")

@@ -456,7 +456,8 @@ def test_spread_for_python_guard(spark):
     ).coalesce(1)
     spread = _spread_for_python(narrow)
     assert spread.rdd.getNumPartitions() == par
-    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
+    if par >= 2:  # on one core the 1-partition frame is already spread
+        assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
     # row set is partitioning-independent
     assert sorted(r.doc_id for r in spread.collect()) == list(range(64))
 

@@ -4,6 +4,7 @@ and the rows-only queries the oracle can't check."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from eventstreams_spark import registry
@@ -187,6 +188,92 @@ def test_grok_syslogline_spark_side(spark):
     row = df.select(*[c.alias(k) for k, c in cols.items()]).collect()[0]
     assert (row.syslog_host, row.program, row.pid) == ("web01", "sshd", "2451")
     assert row.syslog_message == "Failed password"
+
+
+_GROK_LINES = [
+    '93.180.71.3 - frank [18/Nov/2023:10:27:31 +0000] "GET /d/p_1?x=1 HTTP/1.1" 304 1024 '
+    '"http://example.com/start" "Mozilla/5.0 (X11; Linux x86_64)"',
+    'web-01.example.com - - [01/Jan/2024:00:00:00 +0000] "POST /api" 500 - "-" "curl/8"',
+    "Jan 12 06:30:45 web01 sshd[2451]: Failed password for $1 from \\ here",
+    "Feb  3 23:59:59 10.0.0.7 cron: (root) CMD",
+]
+_GROK_PATTERNS = [
+    "%{COMBINEDAPACHELOG}",
+    "%{SYSLOGLINE}",
+    "%{COMMONAPACHELOG}",  # optional httpversion and bytes groups
+    r"^%{SYSLOGTIMESTAMP:ts} %{IPORHOST:host}(?: %{PROG:prog}(?:\[%{POSINT:pid}\])?)?",
+]
+_GROK_SPECIAL = ["", "\u0001", "\n", "$", "$1", "\\", "\\1"]
+
+
+_grok_noise = st.text(alphabet='ab 1.:[]"\u0001\n$\\', max_size=4)
+_grok_body = st.tuples(
+    st.sampled_from(_GROK_LINES + [""]),
+    st.integers(min_value=0, max_value=150),
+    st.sampled_from(_GROK_SPECIAL),
+).map(lambda t: t[0][: t[1]] + t[2] + t[0][t[1]:])
+_grok_values = st.lists(
+    st.one_of(
+        st.none(),
+        st.sampled_from(_GROK_SPECIAL),
+        st.tuples(_grok_noise, _grok_body, _grok_noise).map("".join),
+    ),
+    min_size=1,
+    max_size=25,
+)
+
+
+@settings(deadline=None, max_examples=12, print_blob=False)
+@given(_grok_values)
+def test_grok_extract_equals_per_field_regexp_extract(spark, vals):
+    """grok_extract's one-match kernel is exactly per-field
+    regexp_extract (first match, "" for no match or an absent group,
+    NULL for NULL), including values holding the rewrite separator,
+    replacement metacharacters, newlines and text around the match.
+    Batched: one Spark job per hypothesis example."""
+    from eventstreams_spark.functions.grok import grok_extract, grok_to_regex
+
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "id int, v string")
+    got, want = [], []
+    for p, pat in enumerate(_GROK_PATTERNS):
+        regex, fields = grok_to_regex(pat)
+        cols = grok_extract("v", pat)
+        assert list(cols) == fields
+        for i, f in enumerate(fields):
+            got.append(cols[f].alias(f"g{p}_{f}"))
+            want.append(F.regexp_extract("v", regex, i + 1).alias(f"w{p}_{f}"))
+    rows = df.select("id", F.array(*got).alias("got"), F.array(*want).alias("want")).collect()
+    for r in rows:
+        assert r.got == r.want, repr(vals[r.id])
+
+
+def test_grok_chain_plans_one_match_per_row(spark, tmp_path):
+    """Plan tripwire on the ingest chain (grok → date → translate →
+    deadletter): the healthy frame matches the grok regex once in the
+    pushed-down Filter and once in the Project (was once per field),
+    and every regexp_extract sits in the separator fallback branch."""
+    import re
+
+    from eventstreams_spark.pipeline import Pipeline
+
+    src = tmp_path / "log.txt"
+    src.write_text("\n".join(_GROK_LINES[:2] + ["garbled line"]) + "\n")
+    steps = [
+        {"type": "grok", "source": "value", "pattern": "%{COMBINEDAPACHELOG}"},
+        {"type": "date", "source": "timestamp", "formats": ["dd/MMM/yyyy:HH:mm:ss Z"]},
+        {"type": "translate", "source": "response", "mapping": {"200": "ok"},
+         "target": "status_class", "default": "other"},
+        {"type": "deadletter", "when": "clientip = ''", "reason": "grok_failure"},
+    ]
+    healthy, dead = Pipeline.from_config({"steps": steps}).apply_split(spark.read.text(str(src)))
+    plan = healthy._jdf.queryExecution().executedPlan().toString()
+    # the scan line repeats the pushed filter, truncated: operators only
+    ops = "\n".join(ln for ln in plan.splitlines() if "FileScan" not in ln)
+    assert ops.count("regexp_replace(") == 2, plan
+    assert ops.count("CASE WHEN Contains(value#") == 2, plan
+    fast_path = re.sub(r"THEN array\(regexp_extract\(.*? ELSE slice\(", "", ops)
+    assert "regexp_extract(" not in fast_path, plan
+    assert healthy.count() == 2 and dead.count() == 1
 
 
 def test_grok_unknown_and_cycle_guard():
