@@ -83,30 +83,6 @@ def hyperplanes(spark, n_planes: int, dim: int) -> DataFrame:
     )
 
 
-def lsh_bucket(df: DataFrame, vec_col: str, n_planes: int, dim: int) -> DataFrame:
-    """Append an integer `bucket` column: sign-bit signature over
-    hash-derived random hyperplanes (random projection LSH).
-
-    The plane matrix is a single broadcast row (n_planes × dim
-    doubles); the signature folds JVM-side:
-    bucket = Σ_p (dot(vec, plane_p) >= 0) << p. At scale `bucket`
-    becomes the shuffle/partition key for candidate generation —
-    similar vectors collide with probability 1 - θ/π per bit.
-    """
-    spark = df.sparkSession
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    bucket = F.aggregate(
-        F.col("planes"),
-        F.lit(0).cast("long"),
-        lambda acc, pvec: acc * 2 + F.when(dot(F.col(vec_col), pvec) >= 0, 1).otherwise(0),
-    )
-    return df.crossJoin(F.broadcast(hyperplanes(spark, n_planes, dim))).withColumn(
-        "bucket", bucket
-    ).drop("planes")
-
-
 def lsh_bucket_tables(
     df: DataFrame, vec_col: str, n_planes: int, n_tables: int, dim: int
 ) -> DataFrame:

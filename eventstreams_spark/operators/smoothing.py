@@ -1,10 +1,15 @@
-"""Holt double-exponential smoothing (level + trend) — batch form.
+"""Holt-Winters additive smoothing (level + trend + season) — batch
+form — plus the HMM forward-step helpers shared with the streaming
+burst filter.
 
-Like CUSUM (changepoint.py), Holt's method is a per-key SEQUENTIAL
-fold — level and trend are COUPLED recurrences (each step needs both
-previous states), so no window function expresses it; ``applyInPandas``
-over each key's (ts, event_id)-sorted rows is the right home, with the
-same hot-series split strategy as every keyed fold.
+Holt's methods are per-key SEQUENTIAL folds — level, trend and season
+are COUPLED recurrences (each step needs the previous states), so no
+window function expresses them; ``applyInPandas`` over each key's
+ordered rows is the right home, with the same hot-series split
+strategy as every keyed fold. Holt linear, Kalman level and the HMM
+burst filter have stream forms in streaming/stateful.py, whose
+keyed-fold kernel also runs them on batch frames; Holt-Winters has no
+stream form, so its batch fold lives here.
 
 The one-step forecast error sum (SSE) accumulates INSIDE the fold:
 a post-hoc float SUM over shuffled rows would be order-dependent
@@ -12,70 +17,10 @@ across engines, the sequential running sum is bit-exact vs the
 recursive-CTE oracle replay (functions/exact.py rationale, applied to
 an inherently sequential statistic).
 """
-
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def holt_linear_batch(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.3,
-) -> DataFrame:
-    """Holt's linear method per key: l_t = αx + (1−α)(l+b),
-    b_t = β(l_t − l_prev) + (1−β)b; initialized l₁ = x₁, b₁ = 0.
-    Output = input + (rn, level, trend, forecast, sse_running) where
-    forecast is the PRE-update one-step-ahead prediction (null for
-    the first row) and sse_running the sequential Σ(x−forecast)²."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("forecast", DoubleType()),
-            StructField("sse_running", DoubleType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [ts_col] + [
-            c for c in ("event_id",) if c in pdf.columns and c != ts_col
-        ]
-        pdf = pdf.sort_values(cols, kind="mergesort").copy()
-        lvl = trend = sse = 0.0
-        rns, lvls, trends, fcs, sses = [], [], [], [], []
-        for i, x in enumerate(pdf[value_col]):
-            if i == 0:
-                lvl, trend, fc = x, 0.0, None
-            else:
-                fc = lvl + trend
-                err = x - fc
-                sse = sse + err * err
-                new_lvl = alpha * x + (1.0 - alpha) * (lvl + trend)
-                trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
-                lvl = new_lvl
-            rns.append(i + 1)
-            lvls.append(lvl)
-            trends.append(trend)
-            fcs.append(fc)
-            sses.append(sse)
-        pdf["rn"] = rns
-        pdf["level"] = lvls
-        pdf["trend"] = trends
-        pdf["forecast"] = pd.array(fcs, dtype="float64")
-        pdf["sse_running"] = sses
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
 
 
 def holt_winters_batch(
@@ -89,8 +34,8 @@ def holt_winters_batch(
     gamma: float = 0.3,
 ) -> DataFrame:
     """Additive Holt-Winters (level + trend + seasonal) per key — the
-    seasonal extension of holt_linear_batch, same sequential-fold
-    contract. Initialization: the first ``period`` rows seed
+    seasonal extension of streaming/stateful.py::holt_linear_stream,
+    same sequential-fold contract. Initialization: the first ``period`` rows seed
     l = mean(first period), b = 0, s_i = y_i − l; the recurrence runs
     from row period+1 with the one-step forecast l + b + s_{t−m}
     and the SSE accumulating inside the fold (bit-exact vs a
@@ -163,65 +108,6 @@ def holt_winters_batch(
     return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
 
 
-def kalman_level_batch(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    q_var: float = 100000.0,
-    r_var: float = 1000000.0,
-) -> DataFrame:
-    """1-D Kalman filter (random-walk level + observation noise) per
-    key — the data-adaptive cousin of holt_linear_batch: predict
-    P' = P + Q, gain K = P'/(P'+R), update x += K(z−x), P = (1−K)P'.
-    Initialized x₁ = z₁ with diffuse P₁ = R (gain null on row 1).
-    Output = input + (rn, level, variance, gain). Same sequential-fold
-    contract as Holt: the recurrence is coupled and data-dependent, so
-    applyInPandas over each key's (ts, event_id)-sorted rows; the
-    registered batch query kalman_level_filter_check certifies the
-    identical recurrence as a JVM ``aggregate()`` fold against a
-    recursive-CTE oracle."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("variance", DoubleType()),
-            StructField("gain", DoubleType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [ts_col] + [
-            c for c in ("event_id",) if c in pdf.columns and c != ts_col
-        ]
-        pdf = pdf.sort_values(cols, kind="mergesort").copy()
-        x = p = 0.0
-        rns, xs, ps, ks = [], [], [], []
-        for i, z in enumerate(pdf[value_col]):
-            if i == 0:
-                x, p, k = z, r_var, None
-            else:
-                pp = p + q_var
-                k = pp / (pp + r_var)
-                x = x + k * (z - x)
-                p = (1.0 - k) * pp
-            rns.append(i + 1)
-            xs.append(x)
-            ps.append(p)
-            ks.append(k)
-        pdf["rn"] = rns
-        pdf["level"] = xs
-        pdf["variance"] = ps
-        pdf["gain"] = pd.array(ks, dtype="float64")
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
-
-
 # --- 2-state HMM burst filter (forward log-odds) ---------------------------
 
 # Constants mirror queries/opsstat_extra.py (the JVM aggregate() fold
@@ -269,49 +155,3 @@ def _hmm_init() -> float:
     import math
 
     return math.log(_HMM_P01 / _HMM_P00)
-
-
-def hmm_forward_batch(
-    df: DataFrame,
-    key_col: str,
-    order_col: str,
-    k_col: str,
-    lam0_col: str,
-) -> DataFrame:
-    """Batch 2-state HMM burst filter over a pre-aggregated count
-    frame (key, order, k, lam0): per key, fold the forward log-odds
-    recursion in order and emit (rn, log_odds, p_burst) per row —
-    log_odds clamped at ±30, p_burst = sigmoid. Python twin of the
-    registered JVM-fold query hmm_burst_forward_filter; the streaming
-    GroupState twin is streaming/stateful.py::hmm_burst_stream, and
-    test_hmm_batch_equals_stream pins all three equal."""
-    import math
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("log_odds", DoubleType()),
-            StructField("p_burst", DoubleType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([order_col], kind="mergesort").copy()
-        L = _hmm_init()
-        rns, lods, pbs = [], [], []
-        for k, lam0 in zip(pdf[k_col], pdf[lam0_col]):
-            L = hmm_step_py(L, int(k), float(lam0))
-            lo = max(min(L, _HMM_CLAMP), -_HMM_CLAMP)
-            rns.append(len(rns) + 1)
-            lods.append(_round_half_away(lo, 6))
-            pbs.append(_round_half_away(1.0 / (1.0 + math.exp(-lo)), 6))
-        pdf["rn"] = rns
-        pdf["log_odds"] = lods
-        pdf["p_burst"] = pbs
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)

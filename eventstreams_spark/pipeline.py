@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.grok import grok_parse
+from .functions.json_shape import json_key_set
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -1145,13 +1146,15 @@ def _neardup_dedup(
 @step("schema_drift")
 def _schema_drift(source: str) -> Transform:
     """Live schema-drift monitor as a config step: on a STREAMING
-    frame this is streaming/stateful.schema_drift_stream (GroupState
-    per JSON key-set shape, emit-once ``is_new`` alert — chain
-    ``{type: filter, expr: "is_new"}`` + a sink to get the
-    producer-drift alert feed); on a BATCH frame it emits the same
-    schema as the degenerate one-batch stream (batch_rows =
-    total_rows = the shape's count, is_new = true), so one config
-    audits a parquet snapshot or monitors the live stream unchanged.
+    frame this is streaming/stateful.py::schema_drift_stream
+    (GroupState per JSON key-set shape, emit-once ``is_new`` alert —
+    chain ``{type: filter, expr: "is_new"}`` + a sink to get the
+    producer-drift alert feed); on a BATCH frame it is one JVM
+    aggregate over the same key (functions/json_shape.py::
+    json_key_set) with the schema of the degenerate one-batch stream
+    (batch_rows = total_rows = the shape's count, is_new = true), so
+    one config audits a parquet snapshot or monitors the live stream
+    unchanged.
     """
 
     def t(df: DataFrame) -> DataFrame:
@@ -1159,20 +1162,8 @@ def _schema_drift(source: str) -> Transform:
             from .streaming.stateful import schema_drift_stream
 
             return schema_drift_stream(df, source)
-        key_set = (
-            F.when(F.col(source).isNull(), F.lit("<null>"))
-            .otherwise(
-                F.coalesce(
-                    F.array_join(
-                        F.array_sort(F.json_object_keys(source)), ","
-                    ),
-                    F.lit("<invalid>"),
-                )
-            )
-            .alias("key_set")
-        )
         return (
-            df.select(key_set)
+            df.select(json_key_set(source).alias("key_set"))
             .groupBy("key_set")
             .agg(F.count(F.lit(1)).cast("long").alias("batch_rows"))
             .select(

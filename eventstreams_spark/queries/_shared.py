@@ -1,9 +1,14 @@
-"""Shared oracle-SQL fragments.
+"""Shared query fragments.
 
-One source of truth for constructions used by several oracles, so the
-Spark helper (operators/graph.py::interaction_edges) and the DuckDB
-side cannot drift apart query-by-query.
+One source of truth for constructions used by several queries: oracle
+SQL (so the Spark helper operators/graph.py::interaction_edges and the
+DuckDB side cannot drift apart query-by-query) and the spread guard
+in front of heavy Python stages.
 """
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
 
 # The user interaction graph: edge u→v when v's event immediately
 # follows u's within an event_type stream (self-loops dropped).
@@ -48,3 +53,20 @@ def md5_uniform_sql(expr: str) -> str:
         for i in range(1, 9)
     )
     return f"(({terms} + 0.5) / 4294967296.0)"
+
+
+def _spread_for_python(df: DataFrame) -> DataFrame:
+    """Guarded round-robin repartition before a heavy Python stage
+    (guide §2.5/§4): the bench's single-row-group parquet plans every
+    scan as ONE partition, which pins the whole Python stage — the
+    long-tail media mint chains, the aho_corasick automaton scan, the
+    Poisson-bootstrap fan-out — onto one Python worker. Repartition
+    moves only the small pre-Python rows, and only when the scan's
+    parallelism is below the session's cores; a many-partition cluster
+    scan pays nothing. Round-robin is deterministic
+    (sortBeforeRepartition) and every downstream stage is keyed per
+    row, so results are partitioning-independent."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
 from ..functions.chunking import ChunkText, chunk_text_columnar
+from ..functions.json_shape import json_key_set
 from ..functions.net import cidr_match
 from ..registry import query
 
@@ -621,18 +622,8 @@ def json_schema_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL from json_object_keys), NULLs as '<null>'.
     """
     ev = load_table(spark, sf_dir, "events")
-    key_set = (
-        F.when(F.col("props").isNull(), F.lit("<null>"))
-        .otherwise(
-            F.coalesce(
-                F.array_join(F.array_sort(F.json_object_keys("props")), ","),
-                F.lit("<invalid>"),
-            )
-        )
-        .alias("key_set")
-    )
     return (
-        ev.select(key_set)
+        ev.select(json_key_set("props").alias("key_set"))
         .groupBy("key_set")
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )

@@ -996,19 +996,20 @@ def community_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cusum_reference_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM made hash-checkable: the batch operator
-    (operators/changepoint.py — the same fold the streaming
-    GroupState form runs) over one bounded series, certified against
-    a DuckDB RECURSIVE-CTE reference that replays the fold row by
-    row (target 250, slack 10, threshold 300 — sized to fire on this
-    data). The alarm count and the max pre-reset statistics pin both
-    the accumulate and the reset semantics.
+    """CUSUM made hash-checkable: the streaming operator
+    (streaming/stateful.py::cusum_changepoint_stream) run on a batch
+    frame — the keyed-fold kernel's one-trigger mode, the same fold
+    the GroupState form runs — over one bounded series, certified
+    against a DuckDB RECURSIVE-CTE reference that replays the fold row
+    by row (target 250, slack 10, threshold 300 — sized to fire on
+    this data). The alarm count and the max pre-reset statistics pin
+    both the accumulate and the reset semantics.
 
     Scale: the GATE runs on one bounded slice by construction (the
     recursion depth = slice length); the operator itself partitions
-    by key — see changepoint.py for the hot-series split strategy.
+    by key — see its docstring for the hot-series split strategy.
     """
-    from ..operators.changepoint import cusum_batch
+    from ..streaming.stateful import cusum_changepoint_stream
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -1019,7 +1020,7 @@ def cusum_reference_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("k", F.lit("series"))
     )
-    scored = cusum_batch(
+    scored = cusum_changepoint_stream(
         ev, "k", "ts", "value", target=250.0, slack=10.0, threshold=300.0
     )
     # s_pos/s_neg in the operator are POST-accumulate, pre-reset
@@ -1067,9 +1068,10 @@ def cusum_reference_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def holt_linear_reference_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double-exponential smoothing (level+trend forecasting,
-    T21) made hash-checkable, CUSUM-gate style: the applyInPandas fold
-    (operators/smoothing.py) runs over one bounded series and its
-    final (level, trend, one-step forecast, sequential SSE) are
+    T21) made hash-checkable, CUSUM-gate style: the keyed fold
+    (streaming/stateful.py::holt_linear_stream on a batch frame) runs
+    over one bounded series and its final (level, trend, one-step
+    forecast, sequential SSE) are
     certified against a DuckDB RECURSIVE-CTE replay of the identical
     recurrence (α=0.5, β=0.3). The SSE accumulates inside the fold on
     BOTH sides — a post-hoc float sum would be shuffle-order-dependent
@@ -1079,7 +1081,7 @@ def holt_linear_reference_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself partitions by key (per-series forecasting over millions of
     series is the production shape — state is two floats per series).
     """
-    from ..operators.smoothing import holt_linear_batch
+    from ..streaming.stateful import holt_linear_stream
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -1090,7 +1092,7 @@ def holt_linear_reference_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("k", F.lit("series"))
     )
-    scored = holt_linear_batch(ev, "k", "ts", "value", alpha=0.5, beta=0.3)
+    scored = holt_linear_stream(ev, "k", "ts", "value", alpha=0.5, beta=0.3)
     return scored.agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.round(F.max_by("level", "rn"), 6).alias("last_level"),

@@ -20,24 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-
-
-def _spread_for_python(df: DataFrame) -> DataFrame:
-    """Guarded round-robin repartition before a heavy Python stage
-    (guide §2.5/§4, the aho_corasick/poisson pattern): the bench's
-    single-row-group parquet plans every scan as ONE partition, which
-    pins the whole mapInPandas stage — here the per-doc media mint
-    (hundreds of md5 calls each) plus the decode pool that follows —
-    onto one Python worker. Repartition moves only the tiny pre-mint
-    rows (doc ids), and only when the scan's parallelism is below the
-    session's cores; a many-partition cluster scan pays nothing.
-    Round-robin is deterministic (sortBeforeRepartition) and every
-    downstream mint/decode is keyed per row, so results are
-    partitioning-independent."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
+from ._shared import _spread_for_python
 
 
 @query(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ._shared import _spread_for_python
 
 
 @query(
@@ -459,18 +460,12 @@ def aho_corasick_watchlist_scan(
         StructField("doc_id", LongType()),
         StructField("n", LongType()),
     ])
-    # Spread the per-character Python automaton across every core
-    # (guide §2.5/§4): the single-row-group bench input plans the scan
-    # as ONE partition, so without this the whole corpus walks the
-    # automaton on one Python worker (measured 2.5 s warm at sf0.01 →
-    # ~0.7 s). The repartition moves only (doc_id, text) once and only
-    # when the scan's parallelism is below the session's cores — at
-    # cluster scale a many-partition scan skips it entirely.
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    # Spread the per-character Python automaton across every core:
+    # without the guard the whole corpus walks the automaton on one
+    # Python worker (measured 2.5 s warm at sf0.01 → ~0.7 s). It moves
+    # only (doc_id, text), once.
     ac = (
-        docs.mapInPandas(scan, ac_schema)
+        _spread_for_python(docs).mapInPandas(scan, ac_schema)
         .groupBy("keyword")
         .agg(
             F.sum("n").cast("long").alias("n_occurrences"),

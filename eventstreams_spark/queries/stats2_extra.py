@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ._shared import _spread_for_python
 
 _CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
@@ -462,24 +463,15 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
         )
     )
-    # Repartition the (small) pre-fan-out base so the ×B explode and its
-    # per-draw md5+inverse-CDF work are spread over every core (guide
-    # §2.5: repartition immediately after a low-parallelism read, BEFORE
-    # the fan-out — the shuffle moves only the base rows, 1/B of the
-    # post-explode volume). The single-row-group bench input otherwise
+    # Spread the (small) pre-fan-out base so the ×B explode and its
+    # per-draw md5+inverse-CDF work run on every core (guide §2.5:
+    # repartition immediately after a low-parallelism read, BEFORE the
+    # fan-out — the shuffle moves only the base rows, 1/B of the
+    # post-explode volume). Without it the single-row-group bench input
     # pins all rows×B hashing to ONE task: measured 16.5 s warm at
-    # sf0.01, ~1 s after. Round-robin repartition is deterministic
-    # (sortBeforeRepartition) and the draw is keyed by (b, event_id),
-    # so results are partitioning-independent. Guarded like the
-    # aho_corasick scan spread: a many-partition cluster scan already
-    # has the parallelism and skips the extra exchange.
-    par = spark.sparkContext.defaultParallelism
-    fanout_base = (
-        base.repartition(par)
-        if base.rdd.getNumPartitions() < par
-        else base
-    )
-    hashed = fanout_base.select(
+    # sf0.01, ~1 s after. The draw is keyed by (b, event_id), so
+    # results are partitioning-independent.
+    hashed = _spread_for_python(base).select(
         "event_id", "cents",
         F.explode(F.sequence(F.lit(0), F.lit(_B_REPS - 1))).alias("b"),
     ).select(

@@ -11,19 +11,17 @@ timeout.
 
 Implementation note: Spark 4's ``transformWithStateInPandas`` (typed
 ValueState + TTL) is the forward path for this operator, but its
-driver worker imports ``google.protobuf`` which is not available in
-this container, so the op is built on ``applyInPandasWithState`` —
+Python worker imports ``google.protobuf``, which not every PySpark
+install ships, so the op is a step on the keyed-fold kernel
+(streaming/stateful.py::keyed_fold, ``applyInPandasWithState``) —
 same state-store mechanics (keyed state + ProcessingTime timeout),
 available everywhere Spark 4 runs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -31,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .stateful import keyed_fold
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -60,55 +60,37 @@ def elapsed_stream(
     """Pair start/end events per key and emit elapsed durations.
 
     ``timeout`` (duration string, or None) expires pending starts so
-    state stays bounded. Keys are stringified into ``key``.
+    state stays bounded. Keys are stringified into ``key``. Events fold
+    in (ts, type) order: same-instant events in type-string order.
     """
     ttl_ms: int | None = None
     if timeout is not None:
         amount, unit = timeout.split()
         ttl_ms = int(amount) * _UNITS_MS[unit]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pending = state.get[0] if state.exists else None
-        events: list[tuple[int, str]] = []
-        for pdf in pdfs:
-            for ts, ev in zip(pdf[ts_col], pdf[type_col]):
-                events.append((int(pd.Timestamp(ts).value) // 1000, ev))
-        events.sort()
+    def step(key, rows, state):
+        pending = None if state is None else state[0]
         out: list[tuple] = []
-        for ts_us, ev in events:
+        ts_us = rows[ts_col].values.astype("datetime64[us]").astype("int64")
+        for t, ev in zip(ts_us, rows[type_col]):
             if ev == start_val:
-                pending = ts_us  # last-start-wins
+                pending = int(t)  # last-start-wins
             elif ev == end_val and pending is not None:
-                out.append((key[0], pending, ts_us, (ts_us - pending) / 1e6))
+                out.append((key[0], pending, int(t), (int(t) - pending) / 1e6))
                 pending = None
-        if pending is None:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((pending,))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=["key", "start_us", "end_us", "elapsed_s"])
+        frame = pd.DataFrame(out, columns=["key", "start_us", "end_us", "elapsed_s"])
+        return frame, (None if pending is None else (pending,))
 
     keyed = df.select(
         df[key_col].cast("string").alias("key"),
         df[ts_col].alias(ts_col),
         df[type_col].alias(type_col),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType="start_us long",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        keyed, "key", step,
+        schema=OUTPUT_SCHEMA,
+        state_schema="start_us long",
+        init=None,
+        order=[ts_col, type_col],
+        timeout_ms=ttl_ms,
     )

@@ -3,10 +3,12 @@ continuation lines into events across micro-batch boundaries.
 
 The batch operator (operators/multiline.py) needs the whole line set;
 a live tail gets lines split across micro-batches, so the open event
-must live in keyed state. applyInPandasWithState holds exactly that:
-per source key, the pending (unterminated) event; a start line flushes
-it, a processing-time timeout flushes an idle tail (the Logstash
-``auto_flush_interval``).
+must live in keyed state. The keyed-fold kernel
+(streaming/stateful.py::keyed_fold) holds exactly that: per source key,
+the pending (unterminated) event; a start line flushes it, a
+processing-time timeout flushes an idle tail (the Logstash
+``auto_flush_interval``). The kernel folds a key's whole micro-batch in
+``order_col`` order, however Spark splits it into Arrow chunks.
 
 Scale: one shuffle by source key; state is O(open event) per key —
 bounded by the longest single event, not the stream; Python cost is
@@ -16,11 +18,11 @@ per key-batch via Arrow.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import keyed_fold
 
 
 def multiline_stream(
@@ -52,58 +54,31 @@ def multiline_stream(
         m = rx.search(line) is not None
         return (not m) if negate else m
 
-    out_schema = f"{key_col} string, first_line_no long, n_lines long, message string"
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if flush_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            first_no, n, msg = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {key_col: [key[0]], "first_line_no": [first_no],
-                 "n_lines": [n], "message": [msg]}
-            )
-            return
-        pending = state.get if state.exists else None
-        done: list[tuple[int, int, str]] = []
-        # a key's micro-batch rows can span multiple Arrow chunks (10k
-        # rows/chunk default) arriving in shuffle order — concat FIRST,
-        # then sort once; per-chunk sorting would interleave events
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks).sort_values(order_col) if chunks else pd.DataFrame()
+    def frame(key, events):
+        return pd.DataFrame(
+            {key_col: [key[0]] * len(events),
+             "first_line_no": [e[0] for e in events],
+             "n_lines": [e[1] for e in events],
+             "message": [e[2] for e in events]}
         )
-        if len(batch):
-            for _, row in batch.iterrows():
-                line = row[line_col]
-                if pending is not None and is_cont(line):
-                    pending = (pending[0], pending[1] + 1, pending[2] + sep + line)
-                else:
-                    if pending is not None:
-                        done.append(pending)
-                    pending = (int(row[order_col]), 1, line)
-        if pending is not None:
-            state.update(pending)
-            if flush_ms is not None:
-                state.setTimeoutDuration(flush_ms)
-        if done:
-            yield pd.DataFrame(
-                {key_col: [key[0]] * len(done),
-                 "first_line_no": [d[0] for d in done],
-                 "n_lines": [d[1] for d in done],
-                 "message": [d[2] for d in done]}
-            )
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="first_no long, n long, msg string",
-        outputMode="append",
-        timeoutConf=timeout,
+    def step(key, rows, pending):
+        done: list[tuple[int, int, str]] = []
+        for line_no, line in zip(rows[order_col], rows[line_col]):
+            if pending is not None and is_cont(line):
+                pending = (pending[0], pending[1] + 1, pending[2] + sep + line)
+            else:
+                if pending is not None:
+                    done.append(pending)
+                pending = (int(line_no), 1, line)
+        return (frame(key, done) if done else None), pending
+
+    return keyed_fold(
+        df, key_col, step,
+        schema=f"{key_col} string, first_line_no long, n_lines long, message string",
+        state_schema="first_no long, n long, msg string",
+        init=None,
+        order=order_col,
+        timeout_ms=flush_ms,
+        on_timeout=lambda key, pending: frame(key, [pending]),
     )

@@ -1,28 +1,66 @@
-"""Arbitrary stateful streaming operators (T6/T7).
+"""Arbitrary stateful streaming operators (T6/T7) on one keyed-fold kernel.
 
 applyInPandasWithState gives per-key state with Arrow-batched Python —
 the escape hatch for semantics Spark's built-in stateful ops can't
-express (Logstash ``throttle``/``aggregate``-style accumulation).
+express (Logstash ``throttle``/``aggregate``-style accumulation). Every
+operator here, plus streaming/elapsed.py and streaming/multiline.py, is
+a ``step(key, rows, state) -> (out, new_state)`` body handed to
+:func:`keyed_fold`, the one place that calls it. The kernel's contract:
+
+- Whole-batch fold order. Spark hands a key's micro-batch to Python as
+  Arrow chunks of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
+  in shuffle order. The kernel concatenates ALL of a key's chunks, then
+  sorts once by ``(order..., event_id)`` with a stable mergesort
+  (:func:`_fold_sort`), so ``rows`` is the key's whole micro-batch in
+  event order however Spark chunked it. ``order=None`` keeps arrival
+  order for order-free folds (sums, counts, top-k membership, sketches
+  that sort their own input).
+- State. ``state`` is the stored row, or ``init`` when the key has
+  none; the step returns the new row, or None to remove it. The
+  ``state_schema`` string is fixed when a checkpoint is created:
+  changing an operator's state schema needs a FRESH checkpoint
+  directory (state rows cannot be migrated in place), so each
+  operator's schema string stays as it was first released.
+- Timeouts. ``timeout_ms`` re-arms a processing-time timeout after
+  every call that keeps state; ``timeout_at(state)`` sets an event-time
+  deadline (epoch ms, compared with the watermark). A timed-out key's
+  state is removed and ``on_timeout(key, state)`` may emit a last frame.
+- Output. ``schema`` is the full output schema, or ``append`` lists
+  fields appended to the input schema (per-row operators); the kernel
+  selects the schema's columns, in order, from the step's frame.
+- Batch mode. On a non-streaming frame the same step runs once per key
+  from ``init`` through ``applyInPandas``: the degenerate one-trigger
+  stream, so batch ≡ stream by construction and no operator needs a
+  batch twin. Timeouts never fire in batch mode (there is no later
+  trigger).
 
 Scale notes: state is partitioned by key group (one shuffle), batched
 through Arrow, and stored in the state store per (key, operator) — the
 Python cost is per key-batch, not per row. Keys must be well-
-distributed; a hot key serializes through one Python worker.
+distributed; a hot key serializes through one Python worker and its
+whole micro-batch is held in memory once to be sorted.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import json
 import math
+from collections.abc import Callable
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
+
+from ..functions.json_shape import json_key_set
+from ..operators.smoothing import _HMM_CLAMP, _hmm_init, _round_half_away, hmm_step_py
+
+Step = Callable[[tuple, pd.DataFrame, Any], "tuple[pd.DataFrame | None, Any]"]
 
 
-def _fold_sort(pdf: pd.DataFrame, ts_col: str) -> pd.DataFrame:
+def _fold_sort(rows: pd.DataFrame, order: list[str]) -> pd.DataFrame:
     """Deterministic fold order for sequential stateful operators.
 
     Sorting by the timestamp alone leaves duplicate-ts rows in Spark's
@@ -32,52 +70,84 @@ def _fold_sort(pdf: pd.DataFrame, ts_col: str) -> pd.DataFrame:
     repo's oracles pin.  We tiebreak on ``event_id`` when the frame
     has it, plus a stable mergesort so equal keys keep input order.
     """
-    cols = [ts_col] + [c for c in ("event_id",) if c in pdf.columns and c != ts_col]
-    return pdf.sort_values(cols, kind="mergesort")
+    cols = order + [c for c in ("event_id",) if c in rows.columns and c not in order]
+    return rows.sort_values(cols, kind="mergesort", ignore_index=True)
 
 
-def throttle_stream(
+def keyed_fold(
     df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    limit: int,
+    key: str,
+    step: Step,
+    *,
+    state_schema: str,
+    init: Any,
+    schema: StructType | str | None = None,
+    append: str | None = None,
+    mode: str = "append",
+    order: str | list[str] | None = None,
+    timeout_ms: int | None = None,
+    timeout_at: Callable[[Any], int] | None = None,
+    on_timeout: Callable[[tuple, Any], pd.DataFrame | None] | None = None,
 ) -> DataFrame:
-    """At most ``limit`` events per key over the stream's lifetime
-    (Logstash throttle with no period): a per-key admitted-counter in
-    GroupState; rows beyond the limit are dropped.
+    """Group ``df`` by ``key`` and fold each key's rows through ``step``
+    with its state carried across micro-batches (module docstring has
+    the contract). Exactly one of ``schema`` / ``append`` is given."""
+    if schema is None:
+        # copy, don't .add(): StructType.add mutates in place and would
+        # poison the input DataFrame's cached schema object
+        schema = StructType(
+            list(df.schema.fields) + list(StructType.fromDDL(append).fields)
+        )
+    elif isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    out_cols = schema.names
+    order_cols = [order] if isinstance(order, str) else order
 
-    Output schema = input schema plus ``n_admitted`` (running count per
-    key at admission time).
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
+    def rows_of(pdfs) -> pd.DataFrame:
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        return _fold_sort(rows, order_cols) if order_cols else rows
 
-    # copy, don't .add(): StructType.add mutates in place and would
-    # poison the input DataFrame's cached schema object
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("n_admitted", LongType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    if not df.isStreaming:
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (admitted,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            if admitted >= limit:
-                continue
-            take = _fold_sort(pdf, ts_col).head(limit - admitted).copy()
-            take["n_admitted"] = range(admitted + 1, admitted + len(take) + 1)
-            admitted += len(take)
-            if len(take):
-                yield take[out_cols]
-        state.update((admitted,))
+        def batch_fn(k: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            out, _ = step(k, rows_of([pdf]), init)
+            if out is None:
+                return pd.DataFrame({c: pd.Series(dtype=object) for c in out_cols})
+            return out[out_cols]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="admitted long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        return df.groupBy(key).applyInPandas(batch_fn, schema=schema)
+
+    def stream_fn(k: tuple, pdfs, state: GroupState):
+        if state.hasTimedOut:
+            last = state.get
+            state.remove()
+            out = on_timeout(k, last) if on_timeout is not None else None
+        else:
+            out, new = step(k, rows_of(pdfs), state.get if state.exists else init)
+            if new is None:
+                if state.exists:
+                    state.remove()
+            else:
+                state.update(new)
+                if timeout_ms is not None:
+                    state.setTimeoutDuration(timeout_ms)
+                elif timeout_at is not None:
+                    state.setTimeoutTimestamp(timeout_at(new))
+        if out is not None and len(out):
+            yield out[out_cols]
+
+    if timeout_ms is not None:
+        timeout = GroupStateTimeout.ProcessingTimeTimeout
+    elif timeout_at is not None:
+        timeout = GroupStateTimeout.EventTimeTimeout
+    else:
+        timeout = GroupStateTimeout.NoTimeout
+    return df.groupBy(key).applyInPandasWithState(
+        stream_fn,
+        outputStructType=schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=timeout,
     )
 
 
@@ -90,26 +160,21 @@ def accumulate_stream(
     emitted once per micro-batch (update-style accumulation over
     arbitrary state)."""
 
-    out_schema = f"{key_col} string, running_sum double, running_count long"
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        total, count = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            total += float(pdf[value_col].sum())
-            count += len(pdf)
-        state.update((total, count))
-        yield pd.DataFrame(
+    def step(key, rows, state):
+        total, count = state
+        total += float(rows[value_col].sum())
+        count += len(rows)
+        out = pd.DataFrame(
             {key_col: [key[0]], "running_sum": [total], "running_count": [count]}
         )
+        return out, (total, count)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="total double, cnt long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=f"{key_col} string, running_sum double, running_count long",
+        state_schema="total double, cnt long",
+        init=(0.0, 0),
+        mode="update",
     )
 
 
@@ -121,8 +186,9 @@ def throttle_stream_periodic(
     period_seconds: int = 3600,
 ) -> DataFrame:
     """At most ``limit`` events per key per event-time bucket of
-    ``period_seconds`` — the full Logstash ``throttle`` semantic
-    (the lifetime variant above is its period=∞ special case).
+    ``period_seconds`` — the full Logstash ``throttle`` semantic (the
+    lifetime throttle is the one-bucket case: a period longer than
+    every event's epoch seconds).
 
     State per key is (bucket_start_epoch, admitted) — two longs, O(1)
     regardless of stream length: advancing into a LATER bucket resets
@@ -140,49 +206,29 @@ def throttle_stream_periodic(
     Vectorized: bucket assignment + per-bucket cumcount, no per-row
     Python loop.
     """
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("bucket_start", LongType()), StructField("n_admitted", LongType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    def step(key, rows, state):
+        bucket, admitted = state
+        epochs = (rows[ts_col].astype("int64") // 1_000_000_000).astype("int64")
+        rows = rows.assign(bucket_start=(epochs // period_seconds) * period_seconds)
+        rows = rows[rows["bucket_start"] >= bucket]  # drop late buckets
+        if not len(rows):
+            return None, (bucket, admitted)
+        # 1-based admission index within each bucket, continuing the
+        # carried-in count for the bucket the state is already in
+        idx = rows.groupby("bucket_start").cumcount() + 1
+        carry = (rows["bucket_start"] == bucket) * admitted
+        rows = rows.assign(n_admitted=idx + carry)
+        last_b = int(rows["bucket_start"].iloc[-1])
+        admitted_last = int(rows.loc[rows["bucket_start"] == last_b, "n_admitted"].max())
+        return rows[rows["n_admitted"] <= limit], (last_b, min(admitted_last, limit))
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        bucket, admitted = state.get if state.exists else (-1, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            state.update((bucket, admitted))
-            return
-        batch = _fold_sort(pd.concat(chunks), ts_col)
-        epochs = (batch[ts_col].astype("int64") // 1_000_000_000).astype("int64")
-        b = (epochs // period_seconds) * period_seconds
-        batch = batch.assign(bucket_start=b)
-        batch = batch[batch["bucket_start"] >= bucket]  # drop late buckets
-        if len(batch):
-            # 1-based admission index within each bucket, continuing the
-            # carried-in count for the bucket the state is already in
-            idx = batch.groupby("bucket_start").cumcount() + 1
-            carry = (batch["bucket_start"] == bucket) * admitted
-            batch = batch.assign(n_admitted=idx + carry)
-            last_b = int(batch["bucket_start"].iloc[-1])
-            admitted_last = int(
-                batch.loc[batch["bucket_start"] == last_b, "n_admitted"].max()
-            )
-            out = batch[batch["n_admitted"] <= limit]
-            bucket, admitted = last_b, min(admitted_last, limit)
-            if len(out):
-                yield out[out_cols]
-        state.update((bucket, admitted))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="bucket long, admitted long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="bucket_start long, n_admitted long",
+        state_schema="bucket long, admitted long",
+        init=(-1, 0),
+        order=ts_col,
     )
 
 
@@ -230,39 +276,25 @@ def correlate_tasks_stream(
     pre-r3 checkpoint requires a FRESH checkpoint directory (state
     rows cannot be migrated in place).
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("t_start", TimestampType()),
-            StructField("t_end", TimestampType()),
-            StructField("n_steps", LongType()),
-            StructField("step_value_cents", LongType()),
-            StructField("completed", BooleanType()),
-        ]
-    )
-
-    def _emit(key, t_start_us, t_end_us, n, cents, completed):
+    def frame(key, tasks):
         return pd.DataFrame(
             {
-                key_col: [key],
-                "t_start": [pd.Timestamp(t_start_us, unit="us")],
-                "t_end": [
-                    pd.Timestamp(t_end_us, unit="us") if t_end_us is not None else pd.NaT
-                ],
-                "n_steps": [n],
-                "step_value_cents": [cents],
-                "completed": [completed],
+                key_col: [key[0]] * len(tasks),
+                "t_start": pd.to_datetime([t[0] for t in tasks], unit="us"),
+                "t_end": pd.to_datetime([t[1] for t in tasks], unit="us"),
+                "n_steps": [t[2] for t in tasks],
+                "step_value_cents": [t[3] for t in tasks],
+                "completed": [t[4] for t in tasks],
             }
         )
+
+    def on_timeout(key, state):
+        started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = state
+        if started:
+            # no close → no t_end bound; pending rows count
+            return frame(key, [(t_start_us, None, n + n_cur, cents + cents_cur, False)])
+        return None
 
     # Strict-between semantics (ADVICE r2): steps are events with
     # t_start < ts < t_end, matching the batch `aggregate` step and
@@ -275,64 +307,50 @@ def correlate_tasks_stream(
     # Equality with batch holds when the task's opening start event is
     # first (by event_id) among same-timestamp events, which the
     # (ts, event_id) fold order guarantees for replayed event logs.
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = state.get
-            state.remove()
-            if started:
-                # no close → no t_end bound; pending rows count
-                yield _emit(key[0], t_start_us, None, n + n_cur, cents + cents_cur, False)
-            return
-        started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            for r in _fold_sort(pdf, ts_col).itertuples(index=False):
-                ev_type = getattr(r, type_col)
-                ts_us = getattr(r, ts_col).value // 1000
-                if not started:
-                    if ev_type == start_value:
-                        started, t_start_us, n, cents = 1, ts_us, 0, 0
-                        cur_ts, n_cur, cents_cur = ts_us, 0, 0
-                elif ev_type == end_value and ts_us >= t_start_us:
-                    if cur_ts != ts_us:  # strict <t_end: drop same-ts stage
-                        n += n_cur
-                        cents += cents_cur
-                    yield _emit(key[0], t_start_us, ts_us, n, cents, True)
-                    started, t_start_us, n, cents = 0, 0, 0, 0
-                    cur_ts, n_cur, cents_cur = 0, 0, 0
-                elif ts_us > t_start_us:  # strict >t_start
-                    if ts_us != cur_ts:
-                        n += n_cur
-                        cents += cents_cur
-                        cur_ts, n_cur, cents_cur = ts_us, 0, 0
-                    n_cur += 1
-                    v = getattr(r, value_col)
-                    # floor(v*100 + 0.5): exact_money_sum rounding —
-                    # int() would truncate negatives toward zero
-                    cents_cur += math.floor(v * 100 + 0.5) if v == v else 0
-        if started:
-            state.update((started, t_start_us, n, cents, cur_ts, n_cur, cents_cur))
-            if timeout_ms is not None:
-                state.setTimeoutDuration(timeout_ms)
-        elif state.exists:
-            state.remove()
+    def step(key, rows, state):
+        started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = state
+        closed = []
+        for r in rows.itertuples(index=False):
+            ev_type = getattr(r, type_col)
+            ts_us = getattr(r, ts_col).value // 1000
+            if not started:
+                if ev_type == start_value:
+                    started, t_start_us, n, cents = 1, ts_us, 0, 0
+                    cur_ts, n_cur, cents_cur = ts_us, 0, 0
+            elif ev_type == end_value and ts_us >= t_start_us:
+                if cur_ts != ts_us:  # strict <t_end: drop same-ts stage
+                    n += n_cur
+                    cents += cents_cur
+                closed.append((t_start_us, ts_us, n, cents, True))
+                started, t_start_us, n, cents = 0, 0, 0, 0
+                cur_ts, n_cur, cents_cur = 0, 0, 0
+            elif ts_us > t_start_us:  # strict >t_start
+                if ts_us != cur_ts:
+                    n += n_cur
+                    cents += cents_cur
+                    cur_ts, n_cur, cents_cur = ts_us, 0, 0
+                n_cur += 1
+                v = getattr(r, value_col)
+                # floor(v*100 + 0.5): exact_money_sum rounding —
+                # int() would truncate negatives toward zero
+                cents_cur += math.floor(v * 100 + 0.5) if v == v else 0
+        new = (started, t_start_us, n, cents, cur_ts, n_cur, cents_cur)
+        return (frame(key, closed) if closed else None), (new if started else None)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} string, t_start timestamp, t_end timestamp, "
+            "n_steps long, step_value_cents long, completed boolean"
+        ),
+        state_schema=(
             "started long, t_start_us long, n long, cents long, "
             "cur_ts long, n_cur long, cents_cur long"
         ),
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        init=(0, 0, 0, 0, 0, 0, 0),
+        order=ts_col,
+        timeout_ms=timeout_ms,
+        on_timeout=on_timeout,
     )
 
 
@@ -353,66 +371,41 @@ def zscore_anomaly_stream(
 
     Scoring uses the PRE-update statistics, so results are identical
     however the stream is micro-batched (state evolution is a pure
-    left fold over the key's events in ``ts_col`` order; rows are
-    sorted within each batch and batches must arrive time-ordered,
-    as replayed file streams do).
+    left fold over the key's events in ``ts_col`` order; each
+    micro-batch folds in (ts, event_id) order and batches must arrive
+    time-ordered, as replayed file streams do).
 
     Scale: one shuffle by key; Welford is numerically stable at any
     count; a hot key serializes through one Python worker — pre-split
     hot keys upstream if a single series outruns one core.
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("n_prior", LongType()),
-            StructField("z", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    def step(key, rows, state):
+        n, mean, m2 = state
+        n_prior, zs, flags = [], [], []
+        for x in rows[value_col]:
+            if n >= min_n and m2 > 0.0:
+                z = (x - mean) / math.sqrt(m2 / (n - 1))
+            else:
+                z = None
+            n_prior.append(n)
+            zs.append(z)
+            flags.append(z is not None and abs(z) > threshold)
+            n += 1
+            d = x - mean
+            mean += d / n
+            m2 += d * (x - mean)
+        out = rows.assign(
+            n_prior=n_prior, z=pd.array(zs, dtype="float64"), is_anomaly=flags
+        )
+        return out, (n, mean, m2)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            n_prior, zs, flags = [], [], []
-            for x in pdf[value_col]:
-                if n >= min_n and m2 > 0.0:
-                    std = math.sqrt(m2 / (n - 1))
-                    z = (x - mean) / std
-                else:
-                    z = None
-                n_prior.append(n)
-                zs.append(z)
-                flags.append(z is not None and abs(z) > threshold)
-                n += 1
-                d = x - mean
-                mean += d / n
-                m2 += d * (x - mean)
-            pdf["n_prior"] = n_prior
-            pdf["z"] = pd.array(zs, dtype="float64")
-            pdf["is_anomaly"] = flags
-            yield pdf[out_cols]
-        state.update((n, mean, m2))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, mean double, m2 double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="n_prior long, z double, is_anomaly boolean",
+        state_schema="n long, mean double, m2 double",
+        init=(0, 0.0, 0.0),
+        order=ts_col,
     )
 
 
@@ -423,7 +416,6 @@ def _parse_mg_state(summary_s: str) -> dict[str, int]:
     (\\x1e-separated ``token\\x1fcount`` entries) are detected by
     their non-'{' first byte and migrated on read so restarts across
     the format change keep their counters (ADVICE r3)."""
-    import json
 
     def _legacy(blob: str) -> dict[str, int]:
         counters: dict[str, int] = {}
@@ -480,58 +472,38 @@ def heavy_hitters_stream(
     format (\\x1e/\\x1f separators) are detected on read and migrated
     to JSON in place, so restarts across the upgrade keep counters.
     """
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("bucket", LongType()),
-            StructField("snap", LongType()),
-            StructField("token", StringType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import json
-
-        summary_s, snap = state.get if state.exists else ("", 0)
+    def step(key, rows, state):
+        summary_s, snap = state
         counters = _parse_mg_state(summary_s)
-        for pdf in pdfs:
-            for tok in _fold_sort(pdf, order_col)[token_col]:
-                tok = str(tok)
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < k:
-                    counters[tok] = 1
-                else:
-                    # decrement-all round; drop exhausted counters
-                    for t in list(counters):
-                        counters[t] -= 1
-                        if counters[t] == 0:
-                            del counters[t]
+        for tok in rows[token_col]:
+            tok = str(tok)
+            if tok in counters:
+                counters[tok] += 1
+            elif len(counters) < k:
+                counters[tok] = 1
+            else:
+                # decrement-all round; drop exhausted counters
+                for t in list(counters):
+                    counters[t] -= 1
+                    if counters[t] == 0:
+                        del counters[t]
         snap += 1
-        state.update((json.dumps(counters, sort_keys=True), snap))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             [(key[0], snap, t, c) for t, c in sorted(counters.items())],
             columns=["bucket", "snap", "token", "cnt"],
         )
+        return out, (json.dumps(counters, sort_keys=True), snap)
 
     bucketed = df.withColumn(
         "_bucket", F.pmod(F.hash(F.col(token_col)), F.lit(n_buckets)).cast("long")
     )
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="summary string, snap long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        bucketed, "_bucket", step,
+        schema="bucket long, snap long, token string, cnt long",
+        state_schema="summary string, snap long",
+        init=("", 0),
+        order=order_col,
     )
 
 
@@ -550,65 +522,42 @@ def cusum_changepoint_stream(
     side, and a crossing of ``threshold`` raises an alarm and RESETS
     the side that fired. A sequential fold (each step depends on the
     last), so it is inexpressible as a window function — GroupState
-    is the right home; the batch analog would need a per-key sorted
-    applyInPandas with the same loop.
+    is the right home; on a batch frame the same fold runs once per
+    key (the hash-checked ``cusum_reference_check`` query).
 
     Emits one row per event with both statistics and the alarm flag;
     state is two floats per key, identical however the stream is
-    micro-batched (rows sorted by ``ts_col`` within batches, batches
-    time-ordered as replayed file streams are).
+    micro-batched (each micro-batch folds in (ts, event_id) order,
+    batches time-ordered as replayed file streams are).
 
     Scale: one shuffle by key, O(1) state, pure-Python per-row loop
     over Arrow batches (the fold is inherently sequential per key —
-    parallelism comes from key count, like all keyed stateful ops).
+    parallelism comes from key count, like all keyed stateful ops;
+    pre-split hot keys by a coarser time bucket if one series outruns
+    a core, then stitch like two-level sessionize).
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("s_pos", DoubleType()),
-            StructField("s_neg", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    def step(key, rows, state):
+        s_pos, s_neg = state
+        pos_out, neg_out, alarms = [], [], []
+        for x in rows[value_col]:
+            s_pos = max(0.0, s_pos + (x - target - slack))
+            s_neg = max(0.0, s_neg + (target - x - slack))
+            pos_out.append(s_pos)
+            neg_out.append(s_neg)
+            alarms.append(s_pos > threshold or s_neg > threshold)
+            if s_pos > threshold:
+                s_pos = 0.0
+            if s_neg > threshold:
+                s_neg = 0.0
+        return rows.assign(s_pos=pos_out, s_neg=neg_out, alarm=alarms), (s_pos, s_neg)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        s_pos, s_neg = state.get if state.exists else (0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            pos_out, neg_out, alarms = [], [], []
-            for x in pdf[value_col]:
-                s_pos = max(0.0, s_pos + (x - target - slack))
-                s_neg = max(0.0, s_neg + (target - x - slack))
-                fired = s_pos > threshold or s_neg > threshold
-                pos_out.append(s_pos)
-                neg_out.append(s_neg)
-                alarms.append(fired)
-                if s_pos > threshold:
-                    s_pos = 0.0
-                if s_neg > threshold:
-                    s_neg = 0.0
-            pdf["s_pos"] = pos_out
-            pdf["s_neg"] = neg_out
-            pdf["alarm"] = alarms
-            yield pdf[out_cols]
-        state.update((s_pos, s_neg))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="s_pos double, s_neg double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="s_pos double, s_neg double, alarm boolean",
+        state_schema="s_pos double, s_neg double",
+        init=(0.0, 0.0),
+        order=ts_col,
     )
 
 
@@ -628,54 +577,30 @@ def page_hinkley_stream(
     row), so GroupState is the natural home.
 
     State: (n, sum, m, M) — four numbers per key; batching-invariant
-    given time-ordered arrival (rows sorted per batch).
+    given time-ordered arrival (each micro-batch folds in ts order).
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("ph", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    def step(key, rows, state):
+        n, total, m, m_min = state
+        phs, alarms = [], []
+        for x in rows[value_col]:
+            n += 1
+            total += x
+            m += x - total / n - delta
+            m_min = min(m_min, m)
+            ph = m - m_min
+            phs.append(ph)
+            alarms.append(ph > lam)
+            if ph > lam:
+                n, total, m, m_min = 0, 0.0, 0.0, 0.0
+        return rows.assign(ph=phs, alarm=alarms), (n, total, m, m_min)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total, m, m_min = state.get if state.exists else (0, 0.0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            phs, alarms = [], []
-            for x in pdf[value_col]:
-                n += 1
-                total += x
-                mean = total / n
-                m += x - mean - delta
-                m_min = min(m_min, m)
-                ph = m - m_min
-                fired = ph > lam
-                phs.append(ph)
-                alarms.append(fired)
-                if fired:
-                    n, total, m, m_min = 0, 0.0, 0.0, 0.0
-            pdf["ph"] = phs
-            pdf["alarm"] = alarms
-            yield pdf[out_cols]
-        state.update((n, total, m, m_min))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, total double, m double, m_min double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="ph double, alarm boolean",
+        state_schema="n long, total double, m double, m_min double",
+        init=(0, 0.0, 0.0, 0.0),
+        order=ts_col,
     )
 
 
@@ -698,40 +623,27 @@ def counter_rate_stream(
     Python fold is the sequential-semantics price, parallel across
     series as usual.
     """
-    out_schema = (
-        f"{key_col} string, n_samples long, n_resets long, "
-        "total_increase_cents long, rate_per_sec double"
-    )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        has_prev, prev, min_es, max_es, n, resets, cents = (
-            state.get if state.exists else (0, 0.0, 0.0, 0.0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            for r in _fold_sort(pdf, ts_col).itertuples(index=False):
-                v = getattr(r, value_col)
-                es = getattr(r, ts_col).value / 1e9
-                if not n:
-                    min_es = es
-                max_es = es
-                n += 1
-                if not has_prev:
-                    inc = 0.0
-                elif v >= prev:
-                    inc = v - prev
-                else:
-                    inc = v
-                    resets += 1
-                cents += math.floor(inc * 100 + 0.5)
-                has_prev, prev = 1, v
-        state.update((has_prev, prev, min_es, max_es, n, resets, cents))
-        rate = (
-            round(cents / 100.0 / (max_es - min_es), 6)
-            if max_es > min_es else None
-        )
-        yield pd.DataFrame(
+    def step(key, rows, state):
+        has_prev, prev, min_es, max_es, n, resets, cents = state
+        for r in rows.itertuples(index=False):
+            v = getattr(r, value_col)
+            es = getattr(r, ts_col).value / 1e9
+            if not n:
+                min_es = es
+            max_es = es
+            n += 1
+            if not has_prev:
+                inc = 0.0
+            elif v >= prev:
+                inc = v - prev
+            else:
+                inc = v
+                resets += 1
+            cents += math.floor(inc * 100 + 0.5)
+            has_prev, prev = 1, v
+        rate = round(cents / 100.0 / (max_es - min_es), 6) if max_es > min_es else None
+        out = pd.DataFrame(
             {
                 key_col: [key[0]],
                 "n_samples": [n],
@@ -740,16 +652,21 @@ def counter_rate_stream(
                 "rate_per_sec": [rate],
             }
         )
+        return out, (has_prev, prev, min_es, max_es, n, resets, cents)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} string, n_samples long, n_resets long, "
+            "total_increase_cents long, rate_per_sec double"
+        ),
+        state_schema=(
             "has_prev long, prev double, min_es double, max_es double, "
             "n long, resets long, cents long"
         ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        init=(0, 0.0, 0.0, 0.0, 0, 0, 0),
+        mode="update",
+        order=ts_col,
     )
 
 
@@ -761,64 +678,48 @@ def holt_linear_stream(
     alpha: float = 0.5,
     beta: float = 0.3,
 ) -> DataFrame:
-    """Streaming Holt double-exponential smoothing — the GroupState
-    twin of operators/smoothing.py::holt_linear_batch: coupled
-    level/trend recurrences fold per key with four numbers of state
-    (n, level, trend, sequential SSE); each event emits its rn,
-    post-update level/trend, pre-update forecast, and running SSE,
-    identical to the batch fold however the stream is micro-batched
-    (pinned by test_holt_batch_equals_stream)."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    """Holt double-exponential smoothing per key: l_t = αx + (1−α)(l+b),
+    b_t = β(l_t − l_prev) + (1−β)b; initialized l₁ = x₁, b₁ = 0. The
+    coupled level/trend recurrences fold per key with four numbers of
+    state (n, level, trend, sequential SSE); each event emits its rn,
+    post-update level/trend, PRE-update one-step forecast (null for the
+    first row), and running SSE Σ(x−forecast)². On a batch frame the
+    same fold runs once per key (the hash-checked
+    ``holt_linear_reference_check`` query); the stream is identical
+    however it is micro-batched (pinned by test_holt_batch_equals_stream).
+    The SSE accumulates INSIDE the fold: a post-hoc float SUM over
+    shuffled rows would be order-dependent across engines."""
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("forecast", DoubleType()),
-            StructField("sse_running", DoubleType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    def step(key, rows, state):
+        n, lvl, trend, sse = state
+        rns, lvls, trends, fcs, sses = [], [], [], [], []
+        for x in rows[value_col]:
+            if n == 0:
+                lvl, trend, fc = x, 0.0, None
+            else:
+                fc = lvl + trend
+                sse = sse + (x - fc) * (x - fc)
+                new_lvl = alpha * x + (1.0 - alpha) * (lvl + trend)
+                trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
+                lvl = new_lvl
+            n += 1
+            rns.append(n)
+            lvls.append(lvl)
+            trends.append(trend)
+            fcs.append(fc)
+            sses.append(sse)
+        out = rows.assign(
+            rn=rns, level=lvls, trend=trends,
+            forecast=pd.array(fcs, dtype="float64"), sse_running=sses,
+        )
+        return out, (n, lvl, trend, sse)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, lvl, trend, sse = state.get if state.exists else (0, 0.0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, lvls, trends, fcs, sses = [], [], [], [], []
-            for x in pdf[value_col]:
-                if n == 0:
-                    lvl, trend, fc = x, 0.0, None
-                else:
-                    fc = lvl + trend
-                    err = x - fc
-                    sse = sse + err * err
-                    new_lvl = alpha * x + (1.0 - alpha) * (lvl + trend)
-                    trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
-                    lvl = new_lvl
-                n += 1
-                rns.append(n)
-                lvls.append(lvl)
-                trends.append(trend)
-                fcs.append(fc)
-                sses.append(sse)
-            pdf["rn"] = rns
-            pdf["level"] = lvls
-            pdf["trend"] = trends
-            pdf["forecast"] = pd.array(fcs, dtype="float64")
-            pdf["sse_running"] = sses
-            yield pdf[out_cols]
-        state.update((n, lvl, trend, sse))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, lvl double, trend double, sse double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="rn long, level double, trend double, forecast double, sse_running double",
+        state_schema="n long, lvl double, trend double, sse double",
+        init=(0, 0.0, 0.0, 0.0),
+        order=ts_col,
     )
 
 
@@ -841,51 +742,32 @@ def session_path_stream(
     event closes it. Batch==stream goldens therefore compare against
     the batch sessionization minus each key's final session.
 
-    Determinism: rows fold in (ts, event_id) order per micro-batch
-    (_fold_sort); replayed chunks are ts-ordered, so the cross-batch
-    fold equals the batch window fold. State is O(1) per key
-    (4 scalars + a ≤max_steps path string).
+    Determinism: rows fold in (ts, event_id) order per micro-batch;
+    replayed chunks are ts-ordered, so the cross-batch fold equals the
+    batch window fold. State is O(1) per key (4 scalars + a
+    ≤max_steps path string).
     """
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
-    )
-
     gap_ns = int(gap_seconds) * 1_000_000_000
-    key_type = df.schema[key_col].dataType
-    out_schema = StructType(
-        [
-            StructField(key_col, key_type),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-            StructField("path", StringType()),
-        ]
-    )
+    key_type = df.schema[key_col].dataType.simpleString()
 
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            start_ns, last_ns, n, path = state.get
-        else:
-            start_ns, last_ns, n, path = (-1, -1, 0, "")
+    def step(key, rows, state):
+        start_ns, last_ns, n, path = state
         closed: list[tuple[int, int, int, str]] = []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
-            steps = pdf[step_col].astype(str).values
-            for t, s in zip(ts_ns, steps):
-                if start_ns < 0:
-                    start_ns, last_ns, n, path = (int(t), int(t), 1, s)
-                elif t - last_ns > gap_ns:
-                    closed.append((start_ns, last_ns, n, path))
-                    start_ns, last_ns, n, path = (int(t), int(t), 1, s)
-                else:
-                    n += 1
-                    last_ns = int(t)
-                    if n <= max_steps:
-                        path = path + ">" + s
-        state.update((start_ns, last_ns, n, path))
+        ts_ns = rows[ts_col].values.astype("datetime64[ns]").astype("int64")
+        for t, s in zip(ts_ns, rows[step_col].astype(str).values):
+            if start_ns < 0:
+                start_ns, last_ns, n, path = (int(t), int(t), 1, s)
+            elif t - last_ns > gap_ns:
+                closed.append((start_ns, last_ns, n, path))
+                start_ns, last_ns, n, path = (int(t), int(t), 1, s)
+            else:
+                n += 1
+                last_ns = int(t)
+                if n <= max_steps:
+                    path = path + ">" + s
+        out = None
         if closed:
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_col: [key[0]] * len(closed),
                     "session_start": pd.to_datetime([c[0] for c in closed]),
@@ -894,73 +776,17 @@ def session_path_stream(
                     "path": [c[3] for c in closed],
                 }
             )
+        return out, (start_ns, last_ns, n, path)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="start_ns long, last_ns long, n long, path string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def tdigest_stream(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-    qs=(0.5, 0.9, 0.99),
-    delta: float = 100.0,
-) -> DataFrame:
-    """Streaming t-digest (the GroupState twin of
-    operators/tdigest.py): per key, the centroid set lives in state as
-    two double arrays; each micro-batch's values are digested and
-    MERGED into it (the same k1 compress as batch — mergeability is
-    the whole point of the sketch), and an updated quantile snapshot
-    is emitted per batch (update mode).
-
-    State is O(δ) per key forever — the streaming quantile story that
-    neither watermarked windows (which evict) nor exact percentiles
-    (unbounded state) can tell. Fold order differs from the batch
-    shard build, so snapshots are compared against ACCURACY contracts
-    (rank error ≤ 2%), not bitwise equality — same discipline as the
-    batch gate.
-    """
-    import numpy as np
-
-    from ..operators.tdigest import build as td_build
-    from ..operators.tdigest import merge as td_merge
-    from ..operators.tdigest import quantile as td_quantile
-
-    qs = list(qs)
-    q_fields = ", ".join(f"q{int(q * 1000)} double" for q in qs)
-    out_schema = f"{key_col} string, {q_fields}, n_centroids int, total_weight double"
-
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            means, weights = state.get
-            m = np.asarray(means, dtype=np.float64)
-            w = np.asarray(weights, dtype=np.float64)
-        else:
-            m = np.empty(0)
-            w = np.empty(0)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            if len(vals):
-                m, w = td_merge([(m, w), td_build(vals, delta=delta)], delta=delta)
-        state.update((m.tolist(), w.tolist()))
-        row = {key_col: [key[0]]}
-        for q in qs:
-            row[f"q{int(q * 1000)}"] = [td_quantile(m, w, q)]
-        row["n_centroids"] = [int(len(m))]
-        row["total_weight"] = [float(w.sum())]
-        yield pd.DataFrame(row)
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="means array<double>, weights array<double>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} {key_type}, session_start timestamp, "
+            "session_end timestamp, n_events long, path string"
+        ),
+        state_schema="start_ns long, last_ns long, n long, path string",
+        init=(-1, -1, 0, ""),
+        order=ts_col,
     )
 
 
@@ -985,160 +811,47 @@ def decayed_topk_stream(
     and — as long as ``max_tokens`` isn't hit — batching-invariant:
     per token the fold is (multiply-by-decay, add-1) in timestamp
     order regardless of micro-batch boundaries. ``max_tokens`` bounds
-    state per key; when exceeded, the lightest tokens are pruned
-    (standard decayed-counter approximation — pruned tokens restart
-    from 0, a bounded underestimate like Misra-Gries).
+    state per key; when a micro-batch leaves more, the lightest tokens
+    are pruned (standard decayed-counter approximation — pruned tokens
+    restart from 0, a bounded underestimate like Misra-Gries).
 
     State: JSON token → (weight, ref_ts_ns), O(max_tokens) per key.
     """
-    import json
-
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
     hl_ns = float(half_life_seconds) * 1e9
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("snap", LongType()),
-            StructField("token", StringType()),
-            StructField("weight", DoubleType()),
-        ]
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        blob, snap = state.get if state.exists else ("", 0)
+    def step(key, rows, state):
+        blob, snap = state
         w: dict[str, list] = json.loads(blob) if blob else {}
         max_ts = max((v[1] for v in w.values()), default=0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
-            toks = pdf[token_col].astype(str).values
-            for t, tok in zip(ts_ns, toks):
-                t = int(t)
-                max_ts = max(max_ts, t)
-                if tok in w:
-                    wt, ref = w[tok]
-                    w[tok] = [wt * 2.0 ** (-(t - ref) / hl_ns) + 1.0, t]
-                else:
-                    w[tok] = [1.0, t]
-            if len(w) > max_tokens:
-                decayed = {
-                    tok: wt * 2.0 ** (-(max_ts - ref) / hl_ns)
-                    for tok, (wt, ref) in w.items()
-                }
-                keep = sorted(decayed, key=lambda x: (-decayed[x], x))[:max_tokens]
-                w = {tok: w[tok] for tok in keep}
+        ts_ns = rows[ts_col].values.astype("datetime64[ns]").astype("int64")
+        for t, tok in zip(ts_ns, rows[token_col].astype(str).values):
+            t = int(t)
+            max_ts = max(max_ts, t)
+            if tok in w:
+                wt, ref = w[tok]
+                w[tok] = [wt * 2.0 ** (-(t - ref) / hl_ns) + 1.0, t]
+            else:
+                w[tok] = [1.0, t]
+        decayed = {
+            tok: wt * 2.0 ** (-(max_ts - ref) / hl_ns) for tok, (wt, ref) in w.items()
+        }
+        ranked = sorted(decayed, key=lambda x: (-decayed[x], x))
+        if len(ranked) > max_tokens:
+            ranked = ranked[:max_tokens]
+            w = {tok: w[tok] for tok in ranked}
         snap += 1
-        state.update((json.dumps(w, sort_keys=True), snap))
-        decayed = sorted(
-            (
-                (tok, wt * 2.0 ** (-(max_ts - ref) / hl_ns))
-                for tok, (wt, ref) in w.items()
-            ),
-            key=lambda x: (-x[1], x[0]),
-        )[:k]
-        yield pd.DataFrame(
-            [(str(key[0]), snap, tok, round(wt, 6)) for tok, wt in decayed],
+        out = pd.DataFrame(
+            [(str(key[0]), snap, tok, round(decayed[tok], 6)) for tok in ranked[:k]],
             columns=["key", "snap", "token", "weight"],
         )
+        return out, (json.dumps(w, sort_keys=True), snap)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob string, snap long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def kll_quantile_stream(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    qs=(0.5, 0.99),
-    k: int = 200,
-) -> DataFrame:
-    """Streaming quantile monitor: a per-key KLL sketch
-    (operators/kll.py — deterministic coins) folded across
-    micro-batches in GroupState; after each batch the key emits a
-    snapshot row with the current quantile estimates, total weight,
-    and retained-item count. The streaming twin of the batch
-    kll_quantiles build — O(k·log(n/k)) state per key forever, where
-    a windowed exact percentile would buffer the stream.
-
-    Determinism: the sketch is a pure fold over the sequence of
-    micro-batches (rows sorted by (ts, event_id-free) _fold_sort
-    within each batch; KLL.update_batch is input-order-invariant
-    inside a batch) — replaying the same files with the same batch
-    boundaries reproduces the state bit-for-bit (pinned by
-    tests/test_streaming.py::test_kll_stream_matches_offline_fold).
-    Batch-boundary INDEPENDENCE is deliberately not claimed: KLL
-    compaction points depend on arrival chunking (any one sketch is
-    valid; the rank guarantee holds regardless — also pinned).
-
-    Scale: one shuffle by key; state is a few hundred doubles per
-    key; JSON-serialized (separator-safe, same discipline as
-    heavy_hitters_stream).
-    """
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..operators.kll import KLL
-
-    qs = list(qs)
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("snap", LongType()),
-            StructField("total_weight", DoubleType()),
-            StructField("n_retained", IntegerType()),
-        ]
-        + [StructField(f"q{int(q * 1000)}", DoubleType()) for q in qs]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import json
-
-        blob, snap = state.get if state.exists else ("", 0)
-        if blob:
-            d = json.loads(blob)
-            sk = KLL.deserialize(d["items"], d["levels"], d["flips"], k=k)
-        else:
-            sk = KLL(k=k)
-        for pdf in pdfs:
-            sk.update_batch(_fold_sort(pdf, ts_col)[value_col].to_numpy())
-        snap += 1
-        items, levels, flips = sk.serialize()
-        state.update(
-            (json.dumps({"items": items, "levels": levels, "flips": flips}), snap)
-        )
-        row = {
-            "key": [str(key[0])],
-            "snap": [snap],
-            "total_weight": [sk.total_weight()],
-            "n_retained": [sk.n_retained()],
-        }
-        for q in qs:
-            row[f"q{int(q * 1000)}"] = [sk.quantile(q)]
-        yield pd.DataFrame(row)
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob string, snap long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema="key string, snap long, token string, weight double",
+        state_schema="blob string, snap long",
+        init=("", 0),
+        order=ts_col,
     )
 
 
@@ -1164,32 +877,22 @@ def alert_fsm_stream(
     be the pre-aggregated breach series (e.g. daily flags), not raw
     events — the same contract as the batch query.
     """
-    out_schema = (
-        f"{key_col} string, n_obs long, n_breach long, "
-        "n_alert long, n_suppressed long, alert_now long"
-    )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        alert, cb, cg, n_obs, n_breach, n_alert, n_supp = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            for r in _fold_sort(pdf, order_col).itertuples(index=False):
-                b = int(getattr(r, breach_col))
-                if alert == 0 and b == 1 and cb + 1 >= raise_after:
-                    alert = 1
-                elif alert == 1 and b == 0 and cg + 1 >= clear_after:
-                    alert = 0
-                cb = cb + 1 if b == 1 else 0
-                cg = cg + 1 if b == 0 else 0
-                n_obs += 1
-                n_breach += b
-                n_alert += alert
-                n_supp += 1 if (alert == 1 and b == 0) else 0
-        state.update((alert, cb, cg, n_obs, n_breach, n_alert, n_supp))
-        yield pd.DataFrame(
+    def step(key, rows, state):
+        alert, cb, cg, n_obs, n_breach, n_alert, n_supp = state
+        for b in rows[breach_col]:
+            b = int(b)
+            if alert == 0 and b == 1 and cb + 1 >= raise_after:
+                alert = 1
+            elif alert == 1 and b == 0 and cg + 1 >= clear_after:
+                alert = 0
+            cb = cb + 1 if b == 1 else 0
+            cg = cg + 1 if b == 0 else 0
+            n_obs += 1
+            n_breach += b
+            n_alert += alert
+            n_supp += 1 if (alert == 1 and b == 0) else 0
+        out = pd.DataFrame(
             {
                 key_col: [key[0]],
                 "n_obs": [n_obs],
@@ -1199,16 +902,21 @@ def alert_fsm_stream(
                 "alert_now": [alert],
             }
         )
+        return out, (alert, cb, cg, n_obs, n_breach, n_alert, n_supp)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} string, n_obs long, n_breach long, "
+            "n_alert long, n_suppressed long, alert_now long"
+        ),
+        state_schema=(
             "alert long, cb long, cg long, n_obs long, "
             "n_breach long, n_alert long, n_supp long"
         ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        init=(0, 0, 0, 0, 0, 0, 0),
+        mode="update",
+        order=order_col,
     )
 
 
@@ -1220,61 +928,46 @@ def kalman_level_stream(
     q_var: float = 100000.0,
     r_var: float = 1000000.0,
 ) -> DataFrame:
-    """Streaming 1-D Kalman level filter — the GroupState twin of
-    operators/smoothing.py::kalman_level_batch: per key the carried
-    state is three numbers (n, level x, variance P); each event runs
-    predict P'=P+Q, gain K=P'/(P'+R), update x+=K(z−x), P=(1−K)P' and
-    emits (rn, level, variance, gain), identical to the batch fold
+    """1-D Kalman level filter (random-walk level + observation noise)
+    per key — the data-adaptive cousin of holt_linear_stream: the
+    carried state is three numbers (n, level x, variance P); each event
+    runs predict P'=P+Q, gain K=P'/(P'+R), update x+=K(z−x), P=(1−K)P'
+    and emits (rn, level, variance, gain), initialized x₁ = z₁ with
+    diffuse P₁ = R (gain null on row 1). Identical on a batch frame and
     however the stream is micro-batched (pinned by
-    test_kalman_batch_equals_stream). The data-adaptive gain is the
-    point: after a restart the state picks up mid-Riccati instead of
-    re-warming like a fixed-α EWMA would."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    test_kalman_batch_equals_stream); the registered batch query
+    kalman_level_filter_check certifies the identical recurrence as a
+    JVM ``aggregate()`` fold against a recursive-CTE oracle. The
+    data-adaptive gain is the point: after a restart the state picks up
+    mid-Riccati instead of re-warming like a fixed-α EWMA would."""
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("variance", DoubleType()),
-            StructField("gain", DoubleType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    def step(key, rows, state):
+        n, x, p = state
+        rns, xs, ps, ks = [], [], [], []
+        for z in rows[value_col]:
+            if n == 0:
+                x, p, k = z, r_var, None
+            else:
+                pp = p + q_var
+                k = pp / (pp + r_var)
+                x = x + k * (z - x)
+                p = (1.0 - k) * pp
+            n += 1
+            rns.append(n)
+            xs.append(x)
+            ps.append(p)
+            ks.append(k)
+        out = rows.assign(
+            rn=rns, level=xs, variance=ps, gain=pd.array(ks, dtype="float64")
+        )
+        return out, (n, x, p)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, x, p = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, xs, ps, ks = [], [], [], []
-            for z in pdf[value_col]:
-                if n == 0:
-                    x, p, k = z, r_var, None
-                else:
-                    pp = p + q_var
-                    k = pp / (pp + r_var)
-                    x = x + k * (z - x)
-                    p = (1.0 - k) * pp
-                n += 1
-                rns.append(n)
-                xs.append(x)
-                ps.append(p)
-                ks.append(k)
-            pdf["rn"] = rns
-            pdf["level"] = xs
-            pdf["variance"] = ps
-            pdf["gain"] = pd.array(ks, dtype="float64")
-            yield pdf[out_cols]
-        state.update((n, x, p))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, x double, p double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="rn long, level double, variance double, gain double",
+        state_schema="n long, x double, p double",
+        init=(0, 0.0, 0.0),
+        order=ts_col,
     )
 
 
@@ -1285,62 +978,36 @@ def hmm_burst_stream(
     k_col: str,
     lam0_col: str,
 ) -> DataFrame:
-    """Streaming 2-state HMM burst filter — the GroupState twin of
-    operators/smoothing.py::hmm_forward_batch (and of the registered
-    JVM-fold query hmm_burst_forward_filter): per key the carried
+    """2-state HMM burst filter — the Python twin of the registered
+    JVM-fold query hmm_burst_forward_filter: per key the carried
     state is (n, log-odds L); each arriving count runs one forward
     step L' = round6(ln((p01+p11·e^L)/(p00+p10·e^L)) + k·ln(mult)
-    − (mult−1)·λ0) and emits (rn, log_odds, p_burst = σ(L)). λ0 is a
-    column (the offline-trained base rate joined onto the stream —
-    model-as-a-dimension deployment). The per-step 6-decimal state
-    requantization makes the stream bit-equal to the batch fold
-    across any micro-batch boundary (test_hmm_batch_equals_stream);
-    state is O(1) per key and restart-safe like every fold here."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    − (mult−1)·λ0) and emits (rn, log_odds clamped at ±30, p_burst =
+    σ(L)). λ0 is a column (the offline-trained base rate joined onto
+    the stream — model-as-a-dimension deployment). The per-step
+    6-decimal state requantization makes the stream bit-equal to the
+    same fold over a batch frame across any micro-batch boundary
+    (test_hmm_batch_equals_stream); state is O(1) per key and
+    restart-safe like every fold here."""
 
-    from ..operators.smoothing import (
-        _HMM_CLAMP,
-        _hmm_init,
-        _round_half_away,
-        hmm_step_py,
-    )
+    def step(key, rows, state):
+        n, L = state
+        rns, lods, pbs = [], [], []
+        for k, lam0 in zip(rows[k_col], rows[lam0_col]):
+            L = hmm_step_py(L, int(k), float(lam0))
+            lo = max(min(L, _HMM_CLAMP), -_HMM_CLAMP)
+            n += 1
+            rns.append(n)
+            lods.append(_round_half_away(lo, 6))
+            pbs.append(_round_half_away(1.0 / (1.0 + math.exp(-lo)), 6))
+        return rows.assign(rn=rns, log_odds=lods, p_burst=pbs), (n, L)
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("log_odds", DoubleType()),
-            StructField("p_burst", DoubleType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, L = state.get if state.exists else (0, _hmm_init())
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, lods, pbs = [], [], []
-            for k, lam0 in zip(pdf[k_col], pdf[lam0_col]):
-                L = hmm_step_py(L, int(k), float(lam0))
-                lo = max(min(L, _HMM_CLAMP), -_HMM_CLAMP)
-                n += 1
-                rns.append(n)
-                lods.append(_round_half_away(lo, 6))
-                pbs.append(_round_half_away(1.0 / (1.0 + math.exp(-lo)), 6))
-            pdf["rn"] = rns
-            pdf["log_odds"] = lods
-            pdf["p_burst"] = pbs
-            yield pdf[out_cols]
-        state.update((n, L))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, l double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="rn long, log_odds double, p_burst double",
+        state_schema="n long, l double",
+        init=(0, _hmm_init()),
+        order=ts_col,
     )
 
 
@@ -1363,54 +1030,30 @@ def forecast_error_stream(
     exact (test_forecast_error_batch_equals_stream). State is O(season)
     per key; a model's own predictions would join in as a dimension
     and score identically."""
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("ae_naive", LongType()),
-            StructField("ae_snaive", LongType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
+    def step(key, rows, state):
+        n, ring = state[0], json.loads(state[1])
+        rns, naives, snaives = [], [], []
+        for v in rows[value_col]:
+            v = int(v)
+            naives.append(abs(v - ring[-1]) if ring else None)
+            snaives.append(abs(v - ring[-season]) if len(ring) >= season else None)
+            ring = (ring + [v])[-season:]
+            n += 1
+            rns.append(n)
+        out = rows.assign(
+            rn=rns,
+            ae_naive=pd.array(naives, dtype="Int64"),
+            ae_snaive=pd.array(snaives, dtype="Int64"),
+        )
+        return out, (n, json.dumps(ring))
 
-    import json
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, ring_json = state.get
-            ring = json.loads(ring_json)
-        else:
-            n, ring = 0, []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, naives, snaives = [], [], []
-            for v in pdf[value_col]:
-                v = int(v)
-                naives.append(abs(v - ring[-1]) if ring else None)
-                snaives.append(
-                    abs(v - ring[-season]) if len(ring) >= season else None
-                )
-                ring.append(v)
-                if len(ring) > season:
-                    ring = ring[-season:]
-                n += 1
-                rns.append(n)
-            pdf["rn"] = rns
-            pdf["ae_naive"] = pd.array(naives, dtype="Int64")
-            pdf["ae_snaive"] = pd.array(snaives, dtype="Int64")
-            yield pdf[out_cols]
-        state.update((n, json.dumps(ring)))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, ring string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="rn long, ae_naive long, ae_snaive long",
+        state_schema="n long, ring string",
+        init=(0, "[]"),
+        order=ts_col,
     )
 
 
@@ -1434,58 +1077,39 @@ def token_bucket_stream(
     Emits admitted rows with tokens_after_milli; rejected rows are
     dropped (route them to a DLQ by diffing against the input).
     State is O(1) per key."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("tokens_after_milli", LongType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
     cap_milli = capacity * 1000
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            tokens, last = state.get
-            last = None if last < 0 else last  # -1 encodes "no event yet"
-        else:
-            tokens, last = cap_milli, None
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            secs = (pdf[ts_col].astype("int64") // 1_000_000_000).astype(
-                "int64"
-            )
-            keep, toks = [], []
-            for t in secs:
-                t = int(t)
-                if last is not None and t > last:
-                    tokens = min(cap_milli, tokens + (t - last) * refill_per_sec_milli)
-                # Refill clock only moves FORWARD: an out-of-order event
-                # arriving in a later micro-batch with t < last must not
-                # rewind it, else the next in-order event re-credits refill
-                # time already granted and over-admits past the bucket rate
-                # (ADVICE r4). Late events still spend a token if available.
-                last = t if last is None else max(last, t)
-                if tokens >= 1000:
-                    tokens -= 1000
-                    keep.append(True)
-                    toks.append(tokens)
-                else:
-                    keep.append(False)
-                    toks.append(None)
-            pdf["tokens_after_milli"] = pd.array(toks, dtype="Int64")
-            out = pdf[pd.Series(keep, index=pdf.index)]
-            if len(out):
-                yield out[out_cols]
-        state.update((tokens, -1 if last is None else last))
+    def step(key, rows, state):
+        tokens, last = state
+        last = None if last < 0 else last  # -1 encodes "no event yet"
+        secs = (rows[ts_col].astype("int64") // 1_000_000_000).astype("int64")
+        keep, toks = [], []
+        for t in secs:
+            t = int(t)
+            if last is not None and t > last:
+                tokens = min(cap_milli, tokens + (t - last) * refill_per_sec_milli)
+            # Refill clock only moves FORWARD: an out-of-order event
+            # arriving in a later micro-batch with t < last must not
+            # rewind it, else the next in-order event re-credits refill
+            # time already granted and over-admits past the bucket rate
+            # (ADVICE r4). Late events still spend a token if available.
+            last = t if last is None else max(last, t)
+            if tokens >= 1000:
+                tokens -= 1000
+                keep.append(True)
+                toks.append(tokens)
+            else:
+                keep.append(False)
+                toks.append(None)
+        out = rows.assign(tokens_after_milli=pd.array(toks, dtype="Int64"))[keep]
+        return out, (tokens, -1 if last is None else last)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="tokens long, last long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        append="tokens_after_milli long",
+        state_schema="tokens long, last long",
+        init=(cap_milli, -1),
+        order=ts_col,
     )
 
 
@@ -1507,42 +1131,8 @@ def slo_burn_stream(
     rows bit-match the batch timeline
     (test_slo_burn_stream_matches_batch). State is O(24) per key;
     the still-open hour emits on the next hour's first arrival."""
-    import json
 
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("hr", LongType()),
-            StructField("n", LongType()),
-            StructField("e", LongType()),
-            StructField("burn_1h", DoubleType()),
-            StructField("burn_6h", DoubleType()),
-            StructField("burn_24h", DoubleType()),
-            StructField("fast_alert", BooleanType()),
-            StructField("slow_alert", BooleanType()),
-        ]
-    )
-
-    def _round6(x):
-        import math
-
-        s = 1000000.0
-        return (
-            math.floor(x * s + 0.5) / s
-            if x >= 0
-            else -math.floor(-x * s + 0.5) / s
-        )
-
-    def _emit_row(key, ring, hr, n, e):
+    def burn_row(key, ring, hr, n, e):
         window = ring + [(hr, n, e)]
         n6 = sum(nn for (h, nn, _) in window if h > hr - 6)
         e6 = sum(ee for (h, _, ee) in window if h > hr - 6)
@@ -1553,82 +1143,63 @@ def slo_burn_stream(
             "hr": hr,
             "n": n,
             "e": e,
-            "burn_1h": _round6(4.0 * e / n),
-            "burn_6h": _round6(4.0 * e6 / n6),
-            "burn_24h": _round6(4.0 * e24 / n24),
+            "burn_1h": _round_half_away(4.0 * e / n),
+            "burn_6h": _round_half_away(4.0 * e6 / n6),
+            "burn_24h": _round_half_away(4.0 * e24 / n24),
             "fast_alert": bool(4 * e >= n and 4 * e6 >= n6),
             "slow_alert": bool(40 * e6 >= 9 * n6 and 40 * e24 >= 9 * n24),
         }
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_hr, n, e, ring_json = state.get
-            ring = [tuple(x) for x in json.loads(ring_json)]
-            cur = None if cur_hr < 0 else cur_hr
-        else:
-            cur, n, e, ring = None, 0, 0, []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            hrs = (pdf[ts_col].astype("int64") // 1_000_000_000 // 3600).astype(
-                "int64"
-            )
-            errs = pdf[error_col].astype("int64")
-            rows = []
-            for h, is_e in zip(hrs, errs):
-                h = int(h)
-                if cur is not None and h > cur:
-                    rows.append(_emit_row(key[0], ring, cur, n, e))
-                    ring = [r for r in ring + [(cur, n, e)] if r[0] > cur - 24]
-                    n, e = 0, 0
-                    cur = h
-                elif cur is None:
-                    cur = h
-                elif h < cur:
-                    # Late event for an already-closed hour (crossed a
-                    # micro-batch boundary): folding it into the OPEN
-                    # hour would misattribute the error and skew the 1h
-                    # burn rate (ADVICE r4). Merge into the matching
-                    # ring entry so FUTURE 6h/24h sums use corrected
-                    # counts (the closed hour's own row was already
-                    # emitted and is not retracted). A late event for
-                    # an hour with NO ring entry — a gap hour that saw
-                    # zero on-time events — appends a fresh sorted
-                    # entry rather than being dropped (ADVICE r5);
-                    # only hours aged past the 24h horizon are dropped.
-                    if h > cur - 24:
-                        if any(rh == h for (rh, _, _) in ring):
-                            ring = [
-                                (
-                                    (rh, rn + 1, re_ + int(is_e))
-                                    if rh == h
-                                    else (rh, rn, re_)
-                                )
-                                for (rh, rn, re_) in ring
-                            ]
-                        else:
-                            ring = sorted(ring + [(h, 1, int(is_e))])
-                    continue
-                n += 1
-                e += int(is_e)
-            if rows:
-                yield pd.DataFrame(rows)
-        state.update(
-            (
-                -1 if cur is None else cur,
-                n,
-                e,
-                json.dumps([list(r) for r in ring]),
-            )
-        )
+    def step(key, rows, state):
+        cur, n, e, ring_json = state
+        ring = [tuple(x) for x in json.loads(ring_json)]
+        cur = None if cur < 0 else cur
+        hrs = (rows[ts_col].astype("int64") // 1_000_000_000 // 3600).astype("int64")
+        out = []
+        for h, is_e in zip(hrs, rows[error_col].astype("int64")):
+            h = int(h)
+            if cur is not None and h > cur:
+                out.append(burn_row(key[0], ring, cur, n, e))
+                ring = [r for r in ring + [(cur, n, e)] if r[0] > cur - 24]
+                n, e = 0, 0
+                cur = h
+            elif cur is None:
+                cur = h
+            elif h < cur:
+                # Late event for an already-closed hour (crossed a
+                # micro-batch boundary): folding it into the OPEN
+                # hour would misattribute the error and skew the 1h
+                # burn rate (ADVICE r4). Merge into the matching
+                # ring entry so FUTURE 6h/24h sums use corrected
+                # counts (the closed hour's own row was already
+                # emitted and is not retracted). A late event for
+                # an hour with NO ring entry — a gap hour that saw
+                # zero on-time events — appends a fresh sorted
+                # entry rather than being dropped (ADVICE r5);
+                # only hours aged past the 24h horizon are dropped.
+                if h > cur - 24:
+                    if any(rh == h for (rh, _, _) in ring):
+                        ring = [
+                            (rh, rn + 1, re_ + int(is_e)) if rh == h else (rh, rn, re_)
+                            for (rh, rn, re_) in ring
+                        ]
+                    else:
+                        ring = sorted(ring + [(h, 1, int(is_e))])
+                continue
+            n += 1
+            e += int(is_e)
+        new = (-1 if cur is None else cur, n, e, json.dumps([list(r) for r in ring]))
+        return (pd.DataFrame(out) if out else None), new
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="cur long, n long, e long, ring string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} string, hr long, n long, e long, burn_1h double, "
+            "burn_6h double, burn_24h double, fast_alert boolean, slow_alert boolean"
+        ),
+        state_schema="cur long, n long, e long, ring string",
+        init=(-1, 0, 0, "[]"),
+        order=ts_col,
     )
 
 
@@ -1663,77 +1234,41 @@ def conformal_monitor_stream(
     the other sequential folds.
     """
     import bisect
-    import json
 
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    def step(key, rows, state):
+        rn, ring, cal = state[0], json.loads(state[1]), json.loads(state[2])
+        out = []
+        for x in rows[x_col].astype("int64"):
+            x = int(x)
+            rn += 1
+            if len(ring) < season:
+                ring = ring + [x]
+                continue
+            pred = ring[0]
+            r = abs(x - pred)
+            n_cal = len(cal)
+            if n_cal >= min_cal:
+                q90 = cal[math.ceil(0.9 * (n_cal + 1)) - 1]
+                out.append(
+                    {
+                        "k": key[0], "rn": rn, "x": x, "pred": pred, "r": r,
+                        "n_cal": n_cal, "q90": q90, "covered": r <= q90,
+                    }
+                )
+            bisect.insort(cal, r)
+            ring = ring[1:] + [x]
+        new = (rn, json.dumps(ring), json.dumps(cal))
+        return (pd.DataFrame(out) if out else None), new
 
-    out_schema = StructType(
-        [
-            StructField("k", StringType()),
-            StructField("rn", LongType()),
-            StructField("x", LongType()),
-            StructField("pred", LongType()),
-            StructField("r", LongType()),
-            StructField("n_cal", LongType()),
-            StructField("q90", LongType()),
-            StructField("covered", BooleanType()),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            rn, ring_json, cal_json = state.get
-            ring = json.loads(ring_json)
-            cal = json.loads(cal_json)
-        else:
-            rn, ring, cal = 0, [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(day_col, kind="mergesort")
-            rows = []
-            for x in pdf[x_col].astype("int64"):
-                x = int(x)
-                rn += 1
-                if len(ring) == season:
-                    pred = ring[0]
-                    r = abs(x - pred)
-                    n_cal = len(cal)
-                    if n_cal >= min_cal:
-                        k = math.ceil(0.9 * (n_cal + 1))
-                        q90 = cal[k - 1]
-                        rows.append(
-                            {
-                                "k": key[0],
-                                "rn": rn,
-                                "x": x,
-                                "pred": pred,
-                                "r": r,
-                                "n_cal": n_cal,
-                                "q90": q90,
-                                "covered": r <= q90,
-                            }
-                        )
-                    bisect.insort(cal, r)
-                    ring = ring[1:] + [x]
-                else:
-                    ring = ring + [x]
-            if rows:
-                yield pd.DataFrame(rows)
-        state.update((rn, json.dumps(ring), json.dumps(cal)))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="rn long, ring string, cal string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            "k string, rn long, x long, pred long, r long, "
+            "n_cal long, q90 long, covered boolean"
+        ),
+        state_schema="rn long, ring string, cal string",
+        init=(0, "[]", "[]"),
+        order=day_col,
     )
 
 
@@ -1765,51 +1300,20 @@ def reservoir_es_stream(
     batch stratified variant does with a partitioned window.
     """
     import hashlib
-    import json
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("seq", LongType()),
-            StructField("id", LongType()),
-            StructField("weight", LongType()),
-            StructField("es_key", DoubleType()),
-        ]
-    )
 
     def es_key(ident: int, w: int) -> float:
         h = hashlib.md5(str(ident).encode()).hexdigest()[:8]
         u = (int(h, 16) + 0.5) / 4294967296.0
         return math.log(u) / w
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, blob = state.get
-            res = [tuple(r) for r in json.loads(blob)]
-        else:
-            seq, res = 0, []
-        for pdf in pdfs:
-            for ident, w in zip(
-                pdf[id_col].astype("int64"), pdf[weight_col].astype("int64")
-            ):
-                ident, w = int(ident), int(w)
-                res.append((es_key(ident, w), ident, w))
-            # top-k under (key DESC, id ASC); rebuilt per batch from
-            # <= k + batch rows — membership is order-free
-            res.sort(key=lambda t: (-t[0], t[1]))
-            del res[k:]
+    def step(key, rows, state):
+        seq, res = state[0], [tuple(r) for r in json.loads(state[1])]
+        for ident, w in zip(rows[id_col].astype("int64"), rows[weight_col].astype("int64")):
+            res.append((es_key(int(ident), int(w)), int(ident), int(w)))
+        # top-k under (key DESC, id ASC) — membership is order-free
+        res = sorted(res, key=lambda t: (-t[0], t[1]))[:k]
         seq += 1
-        state.update((seq, json.dumps([list(t) for t in res])))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "seq": [seq] * len(res),
                 "id": [t[1] for t in res],
@@ -1817,17 +1321,14 @@ def reservoir_es_stream(
                 "es_key": [t[0] for t in res],
             }
         )
+        return out, (seq, json.dumps([list(t) for t in res]))
 
-    return (
-        df.withColumn("_g", F.lit("all"))
-        .groupBy("_g")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType="seq long, blob string",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        df.withColumn("_g", F.lit("all")), "_g", step,
+        schema="seq long, id long, weight long, es_key double",
+        state_schema="seq long, blob string",
+        init=(0, "[]"),
+        mode="update",
     )
 
 
@@ -1843,55 +1344,40 @@ def kll_quantile_monitor_stream(
     each micro-batch folds its values into the sketch and emits the
     current quantile estimates with the running count, giving live
     p50/p95/p99 telemetry with O(k·log(n/k)) state per key — the
-    streaming twin the batch sketch family (KLL/t-digest/GK gates)
-    was missing.
+    streaming twin of the batch sketch family (KLL/t-digest/GK gates).
 
     Guarantees: the sketch is deterministic given the sequence of
-    micro-batch value-sets (no RNG), but unlike the integer folds it
-    is NOT bit-invariant to how the stream is batched — compaction
-    boundaries shift. What holds — and what the golden asserts — is
-    the KLL rank guarantee: the TRUE rank of every emitted estimate
-    stays within a few percent of the requested quantile, for any
-    batching. State round-trips through the (items, levels, flips)
-    serialization, so checkpoint-restart resumes the exact sketch.
+    micro-batch value-sets (no RNG; ``KLL.update_batch`` sorts its
+    input, and the kernel hands it each micro-batch whole, so Arrow
+    chunking never moves a compaction point), but unlike the integer
+    folds it is NOT bit-invariant to how the stream is batched —
+    compaction boundaries shift. What holds — and what the goldens
+    assert — is the KLL rank guarantee: the TRUE rank of every emitted
+    estimate stays within a few percent of the requested quantile, for
+    any batching, and replaying the same micro-batches reproduces the
+    offline sketch fed the same chunks bit-for-bit. State round-trips
+    through the (items, levels, flips) serialization, so
+    checkpoint-restart resumes the exact sketch.
 
     Scale: one shuffle by key; Python cost is per key-batch
     (Arrow-batched numpy); a million keys is a million independent
     O(k log n) sketches in the state store.
     """
-    import json
-
     import numpy as np
 
     from ..operators.kll import KLL
 
-    out_schema = (
-        f"{key_col} string, seq long, q double, estimate double, "
-        "n_seen long"
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, n_seen, items_j, levels_j, flips = state.get
-            sk = KLL.deserialize(
-                json.loads(items_j), json.loads(levels_j), flips, k=k
-            )
-        else:
-            seq, n_seen, sk = 0, 0, KLL(k=k)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            vals = vals[~np.isnan(vals)]
-            if len(vals):
-                sk.update_batch(vals)
-                n_seen += len(vals)
+    def step(key, rows, state):
+        seq, n_seen, items_j, levels_j, flips = state
+        sk = KLL.deserialize(json.loads(items_j), json.loads(levels_j), flips, k=k)
+        vals = rows[value_col].to_numpy(dtype="float64")
+        vals = vals[~np.isnan(vals)]
+        if len(vals):
+            sk.update_batch(vals)
+            n_seen += len(vals)
         seq += 1
         items, levels, flips = sk.serialize()
-        state.update(
-            (seq, n_seen, json.dumps(items), json.dumps(levels), flips)
-        )
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 key_col: [key[0]] * len(qs),
                 "seq": [seq] * len(qs),
@@ -1900,15 +1386,14 @@ def kll_quantile_monitor_stream(
                 "n_seen": [n_seen] * len(qs),
             }
         )
+        return out, (seq, n_seen, json.dumps(items), json.dumps(levels), flips)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
-            "seq long, n_seen long, items string, levels string, flips long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=f"{key_col} string, seq long, q double, estimate double, n_seen long",
+        state_schema="seq long, n_seen long, items string, levels string, flips long",
+        init=(0, 0, "[]", "[]", 0),
+        mode="update",
     )
 
 
@@ -1925,89 +1410,71 @@ def tdigest_quantile_monitor_stream(
     the t-digest concentrates capacity at the tails via the k1 scale
     function, so p99/p999 stay tight where a uniform sketch goes
     coarse). Per key the GroupState holds one centroid set
-    (means, weights — O(δ) floats); each micro-batch digests its
-    values (operators/tdigest.build) and MERGES into the carried
-    digest (operators/tdigest.merge — the same recompress the batch
-    shard-merge uses), then emits the current quantile estimates
-    with the running count.
+    (means, weights — O(δ) floats, never O(n)); each micro-batch
+    digests its values (operators/tdigest.build) and MERGES into the
+    carried digest (operators/tdigest.merge — the same k1 recompress
+    the batch shard-merge uses; mergeability is the whole point of the
+    sketch), then emits the current quantile estimates with the
+    running count. The streaming quantile story that neither
+    watermarked windows (which evict) nor exact percentiles (unbounded
+    state) can tell.
 
     Determinism: build/merge/quantile are pure deterministic numpy
     (mergesort, fixed greedy scan — no RNG), so the digest is a
-    function of the micro-batch value-set sequence; like KLL it is
-    not bit-invariant to re-batching (compression boundaries shift),
-    but the accuracy contract — true rank of every estimate within a
-    few percent of the requested quantile, tighter at the tails —
-    holds for any batching, and state round-trips exactly through
-    the JSON (means, weights) serialization so checkpoint-restart
-    resumes the identical digest.
+    function of the micro-batch value-set sequence (each micro-batch
+    is digested whole, however Arrow chunks it); like KLL it is not
+    bit-invariant to re-batching (compression boundaries shift), but
+    the accuracy contract — true rank of every estimate within a few
+    percent of the requested quantile, tighter at the tails — holds
+    for any batching, and state round-trips exactly through the JSON
+    (means, weights) serialization so checkpoint-restart resumes the
+    identical digest.
 
     Scale: one shuffle by key; O(δ) state per key regardless of
     stream length; a million keys is a million independent digests
     in the state store.
     """
-    import json
-
     import numpy as np
 
     from ..operators import tdigest as td
 
-    out_schema = (
-        f"{key_col} string, seq long, q double, estimate double, "
-        "n_seen long"
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, n_seen, means_j, weights_j = state.get
-            means = np.asarray(json.loads(means_j), dtype="float64")
-            weights = np.asarray(json.loads(weights_j), dtype="float64")
-        else:
-            seq, n_seen = 0, 0
-            means = np.empty(0)
-            weights = np.empty(0)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            vals = vals[~np.isnan(vals)]
-            if len(vals):
-                bm, bw = td.build(vals, delta=delta)
-                if len(means):
-                    means, weights = td.merge(
-                        [(means, weights), (bm, bw)], delta=delta
-                    )
-                else:
-                    means, weights = bm, bw
-                n_seen += len(vals)
+    def step(key, rows, state):
+        seq, n_seen, means_j, weights_j = state
+        means = np.asarray(json.loads(means_j), dtype="float64")
+        weights = np.asarray(json.loads(weights_j), dtype="float64")
+        vals = rows[value_col].to_numpy(dtype="float64")
+        vals = vals[~np.isnan(vals)]
+        if len(vals):
+            bm, bw = td.build(vals, delta=delta)
+            if len(means):
+                means, weights = td.merge([(means, weights), (bm, bw)], delta=delta)
+            else:
+                means, weights = bm, bw
+            n_seen += len(vals)
         seq += 1
-        state.update(
-            (
-                seq,
-                n_seen,
-                json.dumps(list(map(float, means))),
-                json.dumps(list(map(float, weights))),
-            )
-        )
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 key_col: [key[0]] * len(qs),
                 "seq": [seq] * len(qs),
                 "q": list(qs),
-                "estimate": [
-                    td.quantile(means, weights, q) for q in qs
-                ],
+                "estimate": [td.quantile(means, weights, q) for q in qs],
                 "n_seen": [n_seen] * len(qs),
             }
         )
+        new = (
+            seq,
+            n_seen,
+            json.dumps(list(map(float, means))),
+            json.dumps(list(map(float, weights))),
+        )
+        return out, new
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
-            "seq long, n_seen long, means string, weights string"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=f"{key_col} string, seq long, q double, estimate double, n_seen long",
+        state_schema="seq long, n_seen long, means string, weights string",
+        init=(0, 0, "[]", "[]"),
+        mode="update",
     )
 
 
@@ -2049,59 +1516,33 @@ def dgim_window_count_stream(
     Scale: one shuffle by key; O(log² W) state per key; a million
     keys is a million independent bucket lists in the state store.
     """
-    import json
 
-    out_schema = (
-        f"{key_col} string, seq long, last_ts long, est_count long, "
-        "n_buckets long"
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, last_ts, bj = state.get
-            buckets = [tuple(b) for b in json.loads(bj)]  # (ts, size) newest-first
-        else:
-            seq, last_ts, buckets = 0, -1, []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            tss = (
-                pdf[ts_col].astype("int64") // 1_000_000_000
-            ).astype("int64")
-            for t in tss:
-                t = int(t)
-                if t > last_ts:
-                    last_ts = t
-                # new singleton bucket at the front (newest)
-                buckets.insert(0, (t, 1))
-                # cascade: when 3 buckets share a size, merge the two
-                # OLDEST of that size into one of double size stamped
-                # with the NEWER of the two (the newest 1 it covers)
-                size = 1
-                while True:
-                    idxs = [
-                        i for i, (_, s) in enumerate(buckets) if s == size
-                    ]
-                    if len(idxs) <= 2:
-                        break
-                    i2, i1 = idxs[-1], idxs[-2]  # two oldest
-                    merged = (buckets[i1][0], size * 2)
-                    del buckets[i2]
-                    buckets[i1] = merged
-                    size *= 2
-                # expire buckets wholly outside the window
-                lo = last_ts - window_s
-                buckets = [(ts, s) for (ts, s) in buckets if ts > lo]
+    def step(key, rows, state):
+        seq, last_ts = state[0], state[1]
+        buckets = [tuple(b) for b in json.loads(state[2])]  # (ts, size) newest-first
+        for t in (rows[ts_col].astype("int64") // 1_000_000_000).astype("int64"):
+            t = int(t)
+            last_ts = max(last_ts, t)
+            # new singleton bucket at the front (newest)
+            buckets.insert(0, (t, 1))
+            # cascade: when 3 buckets share a size, merge the two
+            # OLDEST of that size into one of double size stamped
+            # with the NEWER of the two (the newest 1 it covers)
+            size = 1
+            while True:
+                idxs = [i for i, (_, s) in enumerate(buckets) if s == size]
+                if len(idxs) <= 2:
+                    break
+                i2, i1 = idxs[-1], idxs[-2]  # two oldest
+                merged = (buckets[i1][0], size * 2)
+                del buckets[i2]
+                buckets[i1] = merged
+                size *= 2
+            # expire buckets wholly outside the window
+            buckets = [(ts, s) for (ts, s) in buckets if ts > last_ts - window_s]
         seq += 1
-        if buckets:
-            est = sum(s for _, s in buckets) - buckets[-1][1] // 2
-        else:
-            est = 0
-        state.update(
-            (seq, last_ts, json.dumps([list(b) for b in buckets]))
-        )
-        yield pd.DataFrame(
+        est = sum(s for _, s in buckets) - buckets[-1][1] // 2 if buckets else 0
+        out = pd.DataFrame(
             {
                 key_col: [key[0]],
                 "seq": [seq],
@@ -2110,13 +1551,18 @@ def dgim_window_count_stream(
                 "n_buckets": [len(buckets)],
             }
         )
+        return out, (seq, last_ts, json.dumps([list(b) for b in buckets]))
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="seq long, last_ts long, buckets string",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} string, seq long, last_ts long, est_count long, "
+            "n_buckets long"
+        ),
+        state_schema="seq long, last_ts long, buckets string",
+        init=(0, -1, "[]"),
+        mode="update",
+        order=ts_col,
     )
 
 
@@ -2153,58 +1599,41 @@ def sequence_pattern_stream(
     work is O(|contained|) set probes; emission is the sparse delta
     (new patterns only), so output volume decays as keys saturate.
     """
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
+    key_type = df.schema[key_col].dataType.simpleString()
 
-    key_type = df.schema[key_col].dataType
-    out_schema = StructType(
-        [
-            StructField(key_col, key_type),
-            StructField("pattern", StringType()),
-            StructField("length", LongType()),
-        ]
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            n_seen, contained_s = state.get
-        else:
-            n_seen, contained_s = 0, ""
+    def step(key, rows, state):
+        n_seen, contained_s = state
         contained = set(contained_s.split("|")) if contained_s else set()
         fresh_all: list[str] = []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            for s in pdf[step_col].astype(str).values:
-                if n_seen >= max_events:
-                    break
-                n_seen += 1
-                fresh = set()
-                if s not in contained:
-                    fresh.add(s)
-                for p in contained:
-                    if p.count(">") + 1 < max_len:
-                        q = p + ">" + s
-                        if q not in contained:
-                            fresh.add(q)
-                contained |= fresh
-                fresh_all.extend(sorted(fresh))
-        state.update((int(n_seen), "|".join(sorted(contained))))
+        for s in rows[step_col].astype(str).values[: max(0, max_events - n_seen)]:
+            n_seen += 1
+            fresh = set()
+            if s not in contained:
+                fresh.add(s)
+            for p in contained:
+                if p.count(">") + 1 < max_len:
+                    q = p + ">" + s
+                    if q not in contained:
+                        fresh.add(q)
+            contained |= fresh
+            fresh_all.extend(sorted(fresh))
+        out = None
         if fresh_all:
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_col: [key[0]] * len(fresh_all),
                     "pattern": fresh_all,
                     "length": [q.count(">") + 1 for q in fresh_all],
                 }
             )
+        return out, (int(n_seen), "|".join(sorted(contained)))
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n_seen long, contained string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=f"{key_col} {key_type}, pattern string, length long",
+        state_schema="n_seen long, contained string",
+        init=(0, ""),
+        order=ts_col,
     )
 
 
@@ -2240,70 +1669,36 @@ def bloom_dedup_stream(
     """
     import hashlib
 
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
-    )
-
-    W = (m_bits + 61) // 62
-    out_schema = StructType(
-        [
-            StructField("shard", LongType()),
-            StructField(id_col, StringType()),
-            StructField(ts_col, TimestampType()),
-        ]
-    )
-
     def bits_for(sid: str):
         for hi in range(n_hashes):
-            h = int(
-                hashlib.md5(f"bf{hi}|{sid}".encode()).hexdigest()[:8], 16
-            ) % m_bits
+            h = int(hashlib.md5(f"bf{hi}|{sid}".encode()).hexdigest()[:8], 16) % m_bits
             yield h // 62, 1 << (h % 62)
 
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            words, n_ins = state.get
-            words = list(words)
-        else:
-            words, n_ins = [0] * W, 0
-        out_ids, out_ts = [], []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            for sid, ts in zip(pdf[id_col].astype(str), pdf[ts_col]):
-                pos = list(bits_for(sid))
-                if all(words[w] & m for w, m in pos):
-                    continue  # possibly-seen: drop (dup, or rare fp)
+    def step(key, rows, state):
+        words, n_ins = list(state[0]), state[1]
+        rows = rows.assign(**{id_col: rows[id_col].astype(str)})
+        keep = []
+        for sid in rows[id_col]:
+            pos = list(bits_for(sid))
+            # possibly-seen: drop (dup, or rare false positive)
+            keep.append(not all(words[w] & m for w, m in pos))
+            if keep[-1]:
                 for w, m in pos:
                     words[w] |= m
                 n_ins += 1
-                out_ids.append(sid)
-                out_ts.append(ts)
-        state.update((words, int(n_ins)))
-        if out_ids:
-            yield pd.DataFrame(
-                {
-                    "shard": [key[0]] * len(out_ids),
-                    id_col: out_ids,
-                    ts_col: out_ts,
-                }
-            )
+        return rows[keep], (words, int(n_ins))
 
-    shard = (
-        F.expr(
-            f"CAST(conv(substr(md5(CAST({id_col} AS STRING)), 1, 8),"
-            f" 16, 10) AS BIGINT) % {shards}"
-        )
+    shard = F.expr(
+        f"CAST(conv(substr(md5(CAST({id_col} AS STRING)), 1, 8),"
+        f" 16, 10) AS BIGINT) % {shards}"
     ).alias("shard")
-    return (
-        df.select(shard, F.col(id_col).cast("string").alias(id_col), ts_col)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType="words array<long>, n_inserted long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        df.select(shard, F.col(id_col).cast("string").alias(id_col), ts_col),
+        "shard", step,
+        schema=f"shard long, {id_col} string, {ts_col} timestamp",
+        state_schema="words array<long>, n_inserted long",
+        init=([0] * ((m_bits + 61) // 62), 0),
+        order=ts_col,
     )
 
 
@@ -2329,20 +1724,8 @@ def session_timeout_stream(
     only, removed at close — the TTL pattern that keeps unbounded key
     spaces from accreting state forever.
     """
-    from pyspark.sql.types import (
-        LongType, StructField, StructType, TimestampType,
-    )
-
     gap_ns = int(gap_seconds) * 1_000_000_000
-    key_type = df.schema[key_col].dataType
-    out_schema = StructType(
-        [
-            StructField(key_col, key_type),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-        ]
-    )
+    key_type = df.schema[key_col].dataType.simpleString()
 
     def emit(key, sessions):
         return pd.DataFrame(
@@ -2354,40 +1737,31 @@ def session_timeout_stream(
             }
         )
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            start_ns, last_ns, n = state.get
-            state.remove()
-            yield emit(key, [(start_ns, last_ns, n)])
-            return
-        if state.exists:
-            start_ns, last_ns, n = state.get
-        else:
-            start_ns, last_ns, n = (-1, -1, 0)
+    def step(key, rows, state):
+        start_ns, last_ns, n = state
         closed = []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
-            for t in ts_ns:
-                if start_ns < 0:
-                    start_ns, last_ns, n = (int(t), int(t), 1)
-                elif t - last_ns > gap_ns:
-                    closed.append((start_ns, last_ns, n))
-                    start_ns, last_ns, n = (int(t), int(t), 1)
-                else:
-                    last_ns, n = int(t), n + 1
-        state.update((start_ns, last_ns, n))
-        # close the open session when the watermark passes last + gap
-        state.setTimeoutTimestamp(last_ns // 1_000_000 + gap_seconds * 1000)
-        if closed:
-            yield emit(key, closed)
+        for t in rows[ts_col].values.astype("datetime64[ns]").astype("int64"):
+            if start_ns < 0:
+                start_ns, last_ns, n = (int(t), int(t), 1)
+            elif t - last_ns > gap_ns:
+                closed.append((start_ns, last_ns, n))
+                start_ns, last_ns, n = (int(t), int(t), 1)
+            else:
+                last_ns, n = int(t), n + 1
+        return (emit(key, closed) if closed else None), (start_ns, last_ns, n)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="start_ns long, last_ns long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} {key_type}, session_start timestamp, "
+            "session_end timestamp, n_events long"
+        ),
+        state_schema="start_ns long, last_ns long, n long",
+        init=(-1, -1, 0),
+        order=ts_col,
+        # close the open session when the watermark passes last + gap
+        timeout_at=lambda st: st[1] // 1_000_000 + gap_seconds * 1000,
+        on_timeout=lambda key, st: emit(key, [st]),
     )
 
 
@@ -2423,39 +1797,17 @@ def psi_drift_stream(
     the ref histogram for a DGIM-style decaying one; the emit logic
     is unchanged.
     """
-    import json
-    import math
-
-    out_schema = (
-        f"{key_col} string, seq long, n_ref long, n_cur long, "
-        "psi double, drift_flag boolean"
-    )
     cutoff = pd.Timestamp(ref_cutoff)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, ref_j, cur_j = state.get
-            ref = json.loads(ref_j)
-            cur = json.loads(cur_j)
-        else:
-            seq = 0
-            ref = [0] * n_buckets
-            cur = [0] * n_buckets
-        for pdf in pdfs:
-            is_ref = (pdf[ts_col] < cutoff).to_numpy()
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            for v, r in zip(vals, is_ref):
-                if math.isnan(v):
-                    continue
-                b = min(n_buckets - 1, max(0, int(v // width)))
-                if r:
-                    ref[b] += 1
-                else:
-                    cur[b] += 1
+    def step(key, rows, state):
+        seq, ref, cur = state[0], json.loads(state[1]), json.loads(state[2])
+        is_ref = (rows[ts_col] < cutoff).to_numpy()
+        for v, r in zip(rows[value_col].to_numpy(dtype="float64"), is_ref):
+            if math.isnan(v):
+                continue
+            b = min(n_buckets - 1, max(0, int(v // width)))
+            (ref if r else cur)[b] += 1
         seq += 1
-        state.update((seq, json.dumps(ref), json.dumps(cur)))
         n_ref, n_cur = sum(ref), sum(cur)
         half = 0.5 * n_buckets
         psi = 0.0
@@ -2463,7 +1815,7 @@ def psi_drift_stream(
             p = (ref[b] + 0.5) / (n_ref + half)
             q = (cur[b] + 0.5) / (n_cur + half)
             psi += (p - q) * math.log(p / q)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 key_col: [key[0]],
                 "seq": [seq],
@@ -2473,13 +1825,18 @@ def psi_drift_stream(
                 "drift_flag": [psi > threshold],
             }
         )
+        return out, (seq, json.dumps(ref), json.dumps(cur))
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="seq long, ref string, cur string",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    empty = json.dumps([0] * n_buckets)
+    return keyed_fold(
+        df, key_col, step,
+        schema=(
+            f"{key_col} string, seq long, n_ref long, n_cur long, "
+            "psi double, drift_flag boolean"
+        ),
+        state_schema="seq long, ref string, cur string",
+        init=(0, empty, empty),
+        mode="update",
     )
 
 
@@ -2511,57 +1868,38 @@ def pair_rules_stream(
     O(|basket|) set probes; emission volume is Sum |basket|^2 / 2
     spread over arrivals and decaying as baskets saturate.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
+    key_type = df.schema[basket_col].dataType.simpleString()
 
-    key_type = df.schema[basket_col].dataType
-    out_schema = StructType(
-        [
-            StructField(basket_col, key_type),
-            StructField("kind", StringType()),
-            StructField("a", StringType()),
-            StructField("b", StringType()),
-        ]
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        items_s = state.get[0] if state.exists else ""
-        items = set(items_s.split("|")) if items_s else set()
-        rows: list[tuple[str, str, str]] = []
-        for pdf in pdfs:
-            for s in pdf[item_col].astype(str).values:
-                if "|" in s:
-                    # the delimiter invariant is load-bearing: a '|'
-                    # inside an item would silently split into phantom
-                    # items on the next batch's state decode, breaking
-                    # emit-once with no error — fail loud instead.
-                    raise ValueError(
-                        "pair_rules_stream: item %r contains the state "
-                        "delimiter '|'" % s
-                    )
-                if s in items:
-                    continue
-                rows.append(("item", s, ""))
-                rows.extend(
-                    ("pair", min(s, t), max(s, t)) for t in items
+    def step(key, rows, state):
+        items = set(state[0].split("|")) if state[0] else set()
+        out: list[tuple[str, str, str]] = []
+        for s in rows[item_col].astype(str).values:
+            if "|" in s:
+                # the delimiter invariant is load-bearing: a '|'
+                # inside an item would silently split into phantom
+                # items on the next batch's state decode, breaking
+                # emit-once with no error — fail loud instead.
+                raise ValueError(
+                    "pair_rules_stream: item %r contains the state "
+                    "delimiter '|'" % s
                 )
-                items.add(s)
-        state.update(("|".join(sorted(items)),))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    basket_col: [key[0]] * len(rows),
-                    "kind": [r[0] for r in rows],
-                    "a": [r[1] for r in rows],
-                    "b": [r[2] for r in rows],
-                }
+            if s in items:
+                continue
+            out.append(("item", s, ""))
+            out.extend(("pair", min(s, t), max(s, t)) for t in items)
+            items.add(s)
+        frame = None
+        if out:
+            frame = pd.DataFrame(out, columns=["kind", "a", "b"]).assign(
+                **{basket_col: key[0]}
             )
+        return frame, ("|".join(sorted(items)),)
 
-    return df.groupBy(basket_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="items string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df, basket_col, step,
+        schema=f"{basket_col} {key_type}, kind string, a string, b string",
+        state_schema="items string",
+        init=("",),
     )
 
 
@@ -2625,7 +1963,8 @@ def schema_drift_stream(df: DataFrame, json_col: str) -> DataFrame:
     """Streaming SCHEMA-DRIFT monitor — the live GroupState twin of
     the batch ``json_schema_census`` tripwire (queries/extras.py):
     rows are keyed by their JSON payload's sorted key set (the SAME
-    JVM expression as the batch census — ``json_object_keys`` →
+    JVM expression as the batch census,
+    functions/json_shape.py::json_key_set — ``json_object_keys`` →
     array_sort → join; NULL payload → '<null>', malformed →
     '<invalid>'), state per shape is its cumulative row count, and
     each micro-batch emits ONE row per shape it contains:
@@ -2647,46 +1986,25 @@ def schema_drift_stream(df: DataFrame, json_col: str) -> DataFrame:
     length); state is one long per shape; per-batch work is a
     len() per (shape, batch) group after a JVM-side key extraction.
     """
-    key_set = (
-        F.when(F.col(json_col).isNull(), F.lit("<null>"))
-        .otherwise(
-            F.coalesce(
-                F.array_join(
-                    F.array_sort(F.json_object_keys(json_col)), ","
-                ),
-                F.lit("<invalid>"),
-            )
-        )
-        .alias("key_set")
-    )
-    keyed = df.select(key_set)
-
-    def fn(key, pdfs, state: GroupState):
-        prev = state.get[0] if state.exists else 0
-        is_new = not state.exists
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        total = prev + n
-        state.update((total,))
-        yield pd.DataFrame(
+    def step(key, rows, state):
+        (prev,) = state
+        total = prev + len(rows)
+        out = pd.DataFrame(
             {
                 "key_set": [key[0]],
-                "batch_rows": [n],
+                "batch_rows": [len(rows)],
                 "total_rows": [total],
-                "is_new": [is_new],
+                # a stored total is >= 1, so 0 means first-ever batch
+                "is_new": [prev == 0],
             }
         )
+        return out, (total,)
 
-    return keyed.groupBy("key_set").applyInPandasWithState(
-        fn,
-        outputStructType=(
-            "key_set string, batch_rows long, total_rows long, "
-            "is_new boolean"
-        ),
-        stateStructType="n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df.select(json_key_set(json_col).alias("key_set")), "key_set", step,
+        schema="key_set string, batch_rows long, total_rows long, is_new boolean",
+        state_schema="n long",
+        init=(0,),
     )
 
 

