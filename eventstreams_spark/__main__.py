@@ -25,13 +25,18 @@ expression (rows may match several sinks — filters are independent):
          path: /data/errors}
       - {format: parquet, path: /data/all}
 
-Streaming fan-out defaults to one query per sink (independent
-checkpoints + exactly-once file logs). Add `fanout:` for the
-single-pass shape — ONE foreachBatch query, each micro-batch
-persisted and written to every sink from the cache (source scanned
-once per batch; sink writes at-least-once on retry):
+A streaming run with more than one output (`sinks`, or a `dlq:` next
+to the sink) is ONE foreachBatch query: each micro-batch is computed
+once and every output commits it through its own file-sink log
+(`_spark_metadata`), which skips a replayed batch, so each output is
+written exactly once. The query's checkpoint, trigger and name are
+those of `sink:` / `sinks[0]`, or of `fanout:` if given (per-sink
+checkpointLocation / availableNow keys are then rejected):
 
     fanout: {checkpointLocation: /data/ck, availableNow: true}
+
+A batch run writes every output from one materialization of the
+frame, so the source is read once there too.
 
 Custom sources (event_generator / event_spool / es_bulk) are
 registered automatically so configs can name them like built-ins.
@@ -89,95 +94,97 @@ def _compile(config: dict, app_name: str):
     return spark, pipe.apply(df)
 
 
-def _fanout_single_pass(out, sinks: list[dict], fanout_conf: dict):
-    """Single-pass streaming fan-out: ONE foreachBatch query, the
-    micro-batch persisted once, every sink written from the cache —
-    the source/parse chain runs once per batch no matter how many
-    sinks. The fan-out query owns the ONE checkpoint
-    (``fanout.checkpointLocation``); per-sink checkpointLocation /
-    availableNow keys are rejected (they belong to the
-    one-query-per-sink shape). Sink writes inside foreachBatch are
-    at-least-once on batch retry (Logstash-output semantics); use the
-    default per-sink-query shape when per-sink exactly-once file
-    logs matter more than single-scan ingest."""
-    from .pipeline import write_sink
+#: Output keys that configure the shared streaming query, not a write.
+_QUERY_KEYS = ("checkpointLocation", "availableNow", "queryName")
 
-    sink_confs = []
-    for i, sconf in enumerate(sinks):
-        sconf = dict(sconf)
-        for bad in ("checkpointLocation", "availableNow"):
-            if bad in sconf:
+
+def _refuse_stale_state(spark, outputs: list[dict], query_ck: str | None) -> None:
+    """Stop before an output's own state could hide or skip rows.
+
+    Every output needs a path: the shared query commits files. A
+    checkpoint that an output names but the shared query does not use,
+    and that holds an ``offsets/`` log, was left by a query of the
+    output's own: the output's file-sink log numbers batches by that
+    query, so the shared query's batch ids could be skipped as already
+    committed. An output path holding files but no ``_spark_metadata``
+    log was written by plain batch writes: once a file-sink log
+    exists, readers would see only the files it lists."""
+    jvm, hconf = spark._jvm, spark._jsc.hadoopConfiguration()
+
+    def exists(*parts: str) -> bool:
+        p = jvm.org.apache.hadoop.fs.Path(*parts)
+        return p.getFileSystem(hconf).exists(p)
+
+    for conf in outputs:
+        ck, path = conf.get("checkpointLocation"), conf.get("path")
+        if not path:
+            raise SystemExit(f"{conf.get('format')} output needs a path: "
+                             "a multi-output streaming run writes files")
+        if ck and ck != query_ck and exists(ck, "offsets"):
+            raise SystemExit(
+                f"checkpoint {ck} holds the offsets of a query that wrote "
+                f"{path} on its own; every output is now written by one "
+                "query, so move that checkpoint away before running"
+            )
+        if exists(path) and not exists(path, "_spark_metadata"):
+            p = jvm.org.apache.hadoop.fs.Path(path)
+            if len(p.getFileSystem(hconf).listStatus(p)):
                 raise SystemExit(
-                    f"sinks[{i}]: '{bad}' belongs on `fanout:` when "
-                    "single-pass fan-out is enabled"
+                    f"output {path} holds files but no _spark_metadata log; "
+                    "a file-sink log would hide them from readers"
                 )
-        sink_confs.append(sconf)
+
+
+def _start_shared_query(spark, out, sinks: list[dict], dlq: dict | None, fanout: dict | None):
+    """ONE foreachBatch query for every output of a streaming run.
+
+    Each micro-batch goes through :func:`write_outputs` (computed once,
+    split into healthy, dead and filtered branches) and each output
+    commits its branch with Spark's ``FileStreamSink.addBatch``, whose
+    log skips a batch id it already holds, so a replayed batch is
+    written once per output. The query's checkpoint, trigger and name
+    come from ``fanout:`` if given, else from ``sink:`` / ``sinks[0]``."""
+    from .pipeline import file_stream_sink, write_outputs, write_sink
+
+    if fanout is not None:
+        for i, conf in enumerate(sinks):
+            for bad in ("checkpointLocation", "availableNow"):
+                if bad in conf:
+                    raise SystemExit(f"sinks[{i}]: '{bad}' belongs on `fanout:`")
+        settings = dict(fanout)
+    else:
+        settings = {k: sinks[0][k] for k in _QUERY_KEYS if k in sinks[0]}
+    outputs = [*sinks, *([dlq] if dlq is not None else [])]
+    _refuse_stale_state(spark, outputs, settings.get("checkpointLocation"))
+    file_sinks = [
+        file_stream_sink(spark, {k: v for k, v in conf.items() if k not in (*_QUERY_KEYS, "filter")})
+        for conf in outputs
+    ]
 
     def fn(batch_df, batch_id):
-        batch_df.persist()
-        try:
-            for sconf in sink_confs:
-                sconf = dict(sconf)
-                flt = sconf.pop("filter", None)
-                branch = batch_df.filter(flt) if flt else batch_df
-                sconf.setdefault("mode", "append")
-                write_sink(branch, sconf)
-        finally:
-            batch_df.unpersist()
+        write_outputs(batch_df, sinks, dlq,
+                      commit=lambda i, rows: file_sinks[i].addBatch(batch_id, rows._jdf))
 
-    return write_sink(
-        out, {"format": "foreachBatch", "function": fn, **fanout_conf}
-    )
+    return write_sink(out, {"format": "foreachBatch", "function": fn, **settings})
 
 
 def cmd_run(config: dict, await_seconds: int | None) -> None:
-    from .pipeline import split_dead_letters, write_sink
+    from .pipeline import write_outputs
 
-    _, out = _compile(config, "eventstreams-pipeline")
-    queries = []
-    if "dlq" in config:
-        # dead-letter routing (Logstash DLQ): rows tagged by
-        # deadletter/date/range/... steps go to the dlq sink, healthy
-        # rows to the main sink — tag-don't-drop ends here
-        out, dead = split_dead_letters(out)
-        queries.append(write_sink(dead, config["dlq"]))
-    persisted = False
-    if "sinks" in config:
-        # multi-output fan-out (the Logstash `output { if ... }`
-        # idiom): ONE source/pipeline, N sinks, each with an optional
-        # per-sink `filter` expression. A row can land in several
-        # sinks (filters are independent, not a partition). Streaming:
-        # one query per sink over the shared plan — Spark's standard
-        # fan-out shape (each sink keeps its own checkpoint and
-        # exactly-once file-sink log) — or, with `fanout: {...}`,
-        # a SINGLE foreachBatch query that persists each micro-batch
-        # and writes every sink from the cache, so the source is
-        # scanned once per batch regardless of sink count (the
-        # 100 TB/day ingest shape, SCALE.md §26; sink writes become
-        # at-least-once on batch retry, like Logstash outputs).
-        # Batch: each write is its own action, so the shared frame is
-        # persisted once and every sink filters the cached rows
-        # instead of re-running the source scan + parse chain N times.
-        if out.isStreaming and "fanout" in config:
-            queries.append(
-                _fanout_single_pass(out, config["sinks"], config["fanout"])
-            )
-        else:
-            if not out.isStreaming and len(config["sinks"]) > 1:
-                out = out.persist()
-                persisted = True
-            for sconf in config["sinks"]:
-                sconf = dict(sconf)
-                flt = sconf.pop("filter", None)
-                branch = out.filter(flt) if flt else out
-                queries.append(write_sink(branch, sconf))
-    else:
-        queries.append(write_sink(out, config["sink"]))
+    spark, out = _compile(config, "eventstreams-pipeline")
+    # multi-output fan-out (the Logstash `output { if ... }` idiom):
+    # each `sinks` entry takes the healthy rows through its own
+    # `filter` (filters are independent, a row may land in several);
+    # `dlq:` takes the rows tagged by deadletter/date/range/... steps
+    sinks = config["sinks"] if "sinks" in config else [config["sink"]]
+    dlq = config.get("dlq")
+    if out.isStreaming and (len(sinks) > 1 or dlq is not None or "fanout" in config):
+        queries = [_start_shared_query(spark, out, sinks, dlq, config.get("fanout"))]
+    else:  # batch writes, or a streaming run's one file/console/memory sink
+        queries = write_outputs(out, sinks, dlq)
     for q in queries:
         if q is not None:  # streaming query
             q.awaitTermination(await_seconds) if await_seconds else q.awaitTermination()
-    if persisted:
-        out.unpersist()
     print("done")
 
 

@@ -62,7 +62,10 @@ PATTERNS: dict[str, str] = {
     "URIPARAM": r"\?[A-Za-z0-9$.+!*'|(){},~@#%&/=:;_?\-\[\]<>]*",
     "URIPATHPARAM": r"%{URIPATH}(?:%{URIPARAM})?",
     "URI": r"%{URIPROTO}://(?:%{USER}(?::[^@]*)?@)?(?:%{URIHOST})?(?:%{URIPATHPARAM})?",
-    "QS": r'"(?:[^"\\]|\\.)*"',
+    # unrolled and possessive: the alternation form recursed once per
+    # character in java.util.regex and overflowed a task thread's
+    # stack on a quoted field of a few thousand characters
+    "QS": r'"[^"\\]*+(?:\\.[^"\\]*+)*+"',
     "QUOTEDSTRING": r"%{QS}",
     "PROG": r"[\w._/%-]+",
     "SYSLOGPROG": r"%{PROG:program}(?:\[%{POSINT:pid}\])?",

@@ -52,17 +52,16 @@ def _tag_dlq(df: DataFrame, cond, reason) -> DataFrame:
 
 
 def split_dead_letters(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(healthy, dead) frames from a chain run with dead_letter steps.
+    """(healthy, dead) frames from a chain run with dead_letter steps —
+    the one definition of both: healthy rows have a NULL
+    ``_dlq_reason`` (the column is dropped), dead rows keep it.
 
-    Both are filters over the SAME lineage, so each output is one
-    Catalyst plan and each re-reads and re-parses the source. Measured
-    on the 60k-line, 1 %-dead weblog ingest (grok → date → translate →
-    deadletter, 2 task threads, 4-core box): the DLQ query alone takes
-    1.30 s and the healthy one 2.05 s; as the two concurrent queries
-    of ``cmd_run`` they take 2.92 s. One foreachBatch query that
-    persists each micro-batch and writes both took 2.53 s, but its
-    writes are at-least-once on batch retry where the file sink's log
-    is exactly-once (SCALE.md §28).
+    Both are filters over the same frame, so writing each straight
+    from the source would scan and parse it twice. ``write_outputs``
+    splits a frame it has materialized once instead: on the 60k-line,
+    1 %-dead weblog ingest (grok → date → translate → deadletter, 2
+    task threads, 4-core box) one batch's work fell from 1.97 s with
+    two uncached writes to 1.38 s (SCALE.md §29).
     """
     if DLQ_COL not in df.columns:
         return df, df.limit(0)
@@ -1279,12 +1278,7 @@ def write_sink(df: DataFrame, conf: dict):
             writer = writer.trigger(availableNow=True)
         return writer.start(path) if path else writer.start()
     if "path" not in conf:
-        raise ValueError(
-            f"batch sink '{fmt}' requires a path — note that under "
-            "single-pass `fanout:` every sink is written as a BATCH "
-            "write per micro-batch, so path-less streaming formats "
-            "(console/memory) belong to the one-query-per-sink shape"
-        )
+        raise ValueError(f"batch sink '{fmt}' requires a path")
     path = conf.pop("path")
     mode = conf.pop("mode", "overwrite")
     writer = df.write.format(fmt).mode(mode)
@@ -1292,3 +1286,64 @@ def write_sink(df: DataFrame, conf: dict):
         writer = writer.option(k, v)
     writer.save(path)
     return None
+
+
+def write_outputs(df: DataFrame, sinks: list[dict], dlq: dict | None = None, commit=None) -> list:
+    """Write one frame to every output of a run, computing it once.
+
+    ``sinks`` get the healthy rows (all rows when there is no ``dlq``),
+    each through its optional ``filter``; ``dlq`` gets the dead letters
+    (:func:`split_dead_letters`). With more than one output the frame
+    is first materialized by a lazy local checkpoint, so the source
+    scan and the step chain run once for all of them, and its blocks
+    are released when the writes end. ``commit(i, rows)`` writes output
+    ``i`` of ``sinks + [dlq]`` (a streaming query's per-output file
+    sink); without it each output goes through :func:`write_sink`.
+    Returns what each write returned (a started query for a streaming
+    frame's single output)."""
+    outputs = [*sinks, *([dlq] if dlq is not None else [])]
+    materialized = len(outputs) > 1
+    if materialized:
+        df = df.localCheckpoint(eager=False)
+    try:
+        healthy, dead = split_dead_letters(df) if dlq is not None else (df, None)
+        results = []
+        for i, conf in enumerate(outputs):
+            conf = dict(conf)
+            flt = conf.pop("filter", None)
+            rows = dead if i == len(sinks) else healthy
+            rows = rows.filter(flt) if flt else rows
+            results.append(commit(i, rows) if commit else write_sink(rows, conf))
+        return results
+    finally:
+        if materialized:
+            df._jdf.logicalPlan().rdd().unpersist(False)
+
+
+def file_stream_sink(spark: SparkSession, conf: dict):
+    """Spark's own streaming file sink for an output conf — what
+    ``writeStream.format(fmt).start(path)`` commits through — so a
+    foreachBatch query can commit a micro-batch to it with
+    ``addBatch(batch_id, df._jdf)``. The path keeps its
+    ``_spark_metadata`` log, and a batch id the log already holds is
+    skipped: a replayed micro-batch is written exactly once. Built-in
+    file formats resolve to V2 providers; the sink writes with their
+    V1 ``fallbackFileFormat``."""
+    conf = dict(conf)
+    fmt, path = conf.pop("format"), conf.pop("path")
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    provider = jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+        fmt, jspark.sessionState().conf()
+    ).newInstance()
+    datasources = "org.apache.spark.sql.execution.datasources."
+    if jvm.java.lang.Class.forName(datasources + "v2.FileDataSourceV2").isInstance(provider):
+        provider = provider.fallbackFileFormat().newInstance()
+    if not jvm.java.lang.Class.forName(datasources + "FileFormat").isInstance(provider):
+        raise ValueError(f"output format '{fmt}' is not a file format")
+    options = jvm.java.util.HashMap()
+    for k, v in conf.items():
+        options.put(k, str(v).lower() if isinstance(v, bool) else str(v))
+    utils = jvm.org.apache.spark.api.python.PythonUtils
+    return jvm.org.apache.spark.sql.execution.streaming.sinks.FileStreamSink(
+        jspark, path, provider, utils.toSeq(jvm.java.util.ArrayList()), utils.toScalaMap(options)
+    )

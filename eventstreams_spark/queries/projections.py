@@ -525,7 +525,10 @@ def _apache_oracle() -> str:
 
     regex, fields = grok_to_regex("%{COMBINEDAPACHELOG}")
     g = {f: i + 1 for i, f in enumerate(fields)}
-    sql_re = regex.replace("'", "''")  # DuckDB '...' takes backslashes literally
+    # DuckDB '...' takes backslashes literally. Its RE2 has no possessive
+    # quantifiers (QS uses them) and never backtracks, so the greedy
+    # form matches the same text.
+    sql_re = regex.replace("*+", "*").replace("'", "''")
     return f"""
         WITH lines AS (
           SELECT '10.0.' || CAST(user_id % 256 AS VARCHAR) || '.'

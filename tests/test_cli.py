@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import json
 
-from eventstreams_spark.__main__ import cmd_validate, load_config, main
+import pytest
+
+from eventstreams_spark.__main__ import cmd_run, cmd_validate, load_config, main
 
 
 def test_cli_yaml_pipeline_end_to_end(spark, tmp_path, capsys):
@@ -684,3 +686,135 @@ def test_cli_single_pass_fanout_foreachbatch(spark, tmp_path):
 
     with pytest.raises(SystemExit, match="checkpointLocation"):
         main(["run", str(bad_path)])
+
+
+def _two_output_config(tmp_path, shape: str) -> dict:
+    """A streaming run with healthy and dead rows in each of two
+    micro-batches (one input file each): `sink` + `dlq`, or `sinks`
+    + `dlq` under `fanout:`. The DLQ's own checkpoint is the one a
+    query of its own would use; the shared query leaves it unused."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.log").write_text("10.0.0.9 GET 200\nbad line\n10.0.0.9 POST 500\n")
+    (src / "b.log").write_text("10.0.0.2 GET 200\nworse line\n")
+    cfg = {
+        "source": {"format": "text", "path": str(src), "stream": True,
+                   "schema": "line string", "maxFilesPerTrigger": 1},
+        "steps": [
+            {"type": "grok", "source": "line",
+             "pattern": "%{IP:client} %{WORD:verb} %{NONNEGINT:status}"},
+            {"type": "deadletter", "when": "client = ''", "reason": "grok_failure"},
+        ],
+        "dlq": {"format": "parquet", "path": str(tmp_path / "dlq"),
+                "checkpointLocation": str(tmp_path / "ckd"), "availableNow": True},
+    }
+    out = {"format": "parquet", "path": str(tmp_path / "out")}
+    if shape == "sink":
+        cfg["sink"] = {**out, "checkpointLocation": str(tmp_path / "ck"), "availableNow": True}
+    else:
+        cfg["sinks"] = [out]
+        cfg["fanout"] = {"checkpointLocation": str(tmp_path / "ck"), "availableNow": True}
+    return cfg
+
+
+@pytest.mark.parametrize("shape", ["sink", "fanout"])
+def test_cli_two_output_replay_is_exactly_once(spark, tmp_path, shape):
+    """Drop the query's last commit so a restart replays that
+    micro-batch: each output's file-sink log skips the batch id it
+    already holds, so healthy and dead row counts stay as they were."""
+    cfg = _two_output_config(tmp_path, shape)
+    path = tmp_path / "run.json"
+    path.write_text(json.dumps(cfg))
+    main(["run", str(path)])
+    counts = [spark.read.parquet(str(tmp_path / d)).count() for d in ("out", "dlq")]
+    assert counts == [3, 2]
+    commits = sorted((tmp_path / "ck" / "commits").glob("[0-9]*"), key=lambda p: int(p.name))
+    assert len(commits) == 2
+    for f in (commits[-1], commits[-1].with_name(f".{commits[-1].name}.crc")):
+        f.unlink(missing_ok=True)
+    main(["run", str(path)])
+    assert [spark.read.parquet(str(tmp_path / d)).count() for d in ("out", "dlq")] == counts
+    for d in ("out", "dlq"):
+        assert (tmp_path / d / "_spark_metadata").is_dir()
+
+
+def test_cli_sink_and_dlq_scan_the_source_once(spark, tmp_path, monkeypatch):
+    """Streaming `sink` + `dlq` is one query whose progress reports
+    every input line once; batch `dlq:` writes the dead letters from
+    the materialized frame, not from a second source scan; neither
+    leaves a persisted RDD behind."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from eventstreams_spark import pipeline
+
+    class Log(StreamingQueryListener):
+        def __init__(self):
+            self.started, self.rows, self.ended = [], [], []
+
+        def onQueryStarted(self, event):
+            self.started.append(event.id)
+
+        def onQueryProgress(self, event):
+            self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.ended.append(event.id)
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    cfg = _two_output_config(tmp_path, "sink")
+    log = Log()
+    spark.streams.addListener(log)
+    try:
+        cmd_run(cfg, None)
+        deadline = time.time() + 30
+        while len(log.ended) < len(log.started) and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(log)
+    assert len(log.started) == 1
+    assert sum(log.rows) == 5
+    assert persisted() <= before
+
+    written = {}
+    write_sink = pipeline.write_sink
+
+    def spy(df, conf):
+        written[conf["path"]] = df
+        return write_sink(df, conf)
+
+    monkeypatch.setattr(pipeline, "write_sink", spy)
+    batch = {**cfg, "source": {"format": "text", "path": cfg["source"]["path"], "schema": "line string"},
+             "sink": {"format": "parquet", "path": str(tmp_path / "b_out")},
+             "dlq": {"format": "parquet", "path": str(tmp_path / "b_dlq")}}
+    cmd_run(batch, None)
+    plan = written[str(tmp_path / "b_dlq")]._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and "ExistingRDD" in plan, plan
+    assert spark.read.parquet(str(tmp_path / "b_out")).count() == 3
+    assert spark.read.parquet(str(tmp_path / "b_dlq")).count() == 2
+    assert persisted() <= before
+
+
+def test_cli_refuses_state_left_by_one_query_per_output(spark, tmp_path):
+    """An output checkpoint holding `offsets/` was written by a query
+    of that output's own (the former one-query-per-output shape); its
+    batch ids are not the shared query's, so the run refuses to start
+    rather than skip dead letters. Same for an output path written by
+    plain batch writes, whose files a file-sink log would hide."""
+    cfg = _two_output_config(tmp_path, "sink")
+    (tmp_path / "ckd" / "offsets").mkdir(parents=True)
+    with pytest.raises(SystemExit, match="ckd"):
+        cmd_run(cfg, None)
+    (tmp_path / "ckd" / "offsets").rmdir()
+    (tmp_path / "dlq").mkdir()
+    (tmp_path / "dlq" / "part-0.parquet").write_bytes(b"")
+    with pytest.raises(SystemExit, match="_spark_metadata"):
+        cmd_run(cfg, None)
+    assert not (tmp_path / "ck").exists()

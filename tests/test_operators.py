@@ -247,6 +247,61 @@ def test_grok_extract_equals_per_field_regexp_extract(spark, vals):
         assert r.got == r.want, repr(vals[r.id])
 
 
+_QS_ALTERNATION = r'"(?:[^"\\]|\\.)*"'  # the former QS definition
+_QS_PREFIX = '1.2.3.4 - - [01/Jan/2024:00:00:00 +0000] "GET / HTTP/1.1" 200 5 '
+_qs_piece = st.one_of(
+    st.text(alphabet='ab "\\\n', max_size=12),
+    st.integers(min_value=0, max_value=400).map(lambda n: "u" * n),
+)
+_qs_hazard = st.sampled_from(['\\"', "\\\\", "\\\n", '"', "\\", '"a\\\nb"', '"a\\"b"', '"\\\\"'])
+_qs_values = st.lists(
+    st.one_of(
+        st.none(),
+        st.tuples(st.sampled_from(["", _QS_PREFIX]), _qs_piece, _qs_hazard, _qs_piece, _qs_hazard)
+        .map("".join),
+    ),
+    min_size=1,
+    max_size=20,
+)
+
+
+@settings(deadline=None, max_examples=10, print_blob=False)
+@given(_qs_values)
+def test_grok_qs_unrolled_equals_alternation(spark, vals):
+    """The unrolled, possessive QS matches what the alternation form
+    matched: same grok_parse output over escaped quotes, escaped
+    backslashes, a backslash before a newline, unterminated quotes and
+    long fields (kept short enough for the alternation form's
+    recursion)."""
+    from unittest import mock
+
+    from eventstreams_spark.functions.grok import PATTERNS, grok_parse
+
+    pats = ["%{QS:q}", "%{QS:a} %{QS:b}", "%{COMBINEDAPACHELOG}"]
+    new = [grok_parse("v", p)[0] for p in pats]
+    with mock.patch.dict(PATTERNS, {"QS": _QS_ALTERNATION}):
+        old = [grok_parse("v", p)[0] for p in pats]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "id int, v string")
+    rows = df.select("id", F.array(*new).alias("new"), F.array(*old).alias("old")).collect()
+    for r in rows:
+        assert r.new == r.old, repr(vals[r.id])
+
+
+def test_grok_qs_parses_100k_quoted_field(spark):
+    """A 100k-character user agent (with escaped quotes along it)
+    parses. The alternation form of QS recursed per character in
+    java.util.regex, and a 6,000-character field overflowed the task
+    thread's stack, which took the driver JVM down with it."""
+    from eventstreams_spark.functions.grok import grok_extract
+
+    agent = '"' + ('x' * 48 + '\\"') * 2000 + '"'
+    df = spark.createDataFrame([(_QS_PREFIX + '"-" ' + agent,)], "v string")
+    cols = grok_extract("v", "%{COMBINEDAPACHELOG}")
+    row = df.select(cols["response"].alias("response"), cols["agent"].alias("agent")).collect()[0]
+    assert row.response == "200"
+    assert len(agent) > 100_000 and row.agent == agent
+
+
 def test_grok_chain_plans_one_match_per_row(spark, tmp_path):
     """Plan tripwire on the ingest chain (grok → date → translate →
     deadletter): the healthy frame matches the grok regex once in the

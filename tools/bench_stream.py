@@ -7,13 +7,14 @@ representative pipeline. This tool records three:
 
 1. **Parse pipeline** — the CLI SOAK chain's streaming-native core
    (grok(COMBINEDAPACHELOG) → date → translate → deadletter split →
-   parquet sink + parquet DLQ), driven exactly through the CLI code
-   path (`read_source` → `Pipeline.from_config` →
+   parquet sink + parquet DLQ), built from the CLI's pieces
+   (`read_source` → `Pipeline.from_config` →
    `split_dead_letters` → `write_sink`) over a self-minted
    N-line weblog corpus in K chunk files, availableNow with
-   maxFilesPerTrigger=1 so each chunk is one micro-batch. Note the
-   CLI's DLQ routing starts TWO queries over the shared plan (one
-   per sink), so the corpus is scanned twice — the reported
+   maxFilesPerTrigger=1 so each chunk is one micro-batch. Note this
+   starts TWO queries over the shared plan (one per sink, the shape
+   `cmd_run` used before SCALE.md §29, which now runs one), so the
+   corpus is scanned twice — the reported
    `events_per_sec_wall` is end-to-end for that faithful shape,
    while `events_per_sec_main` is the healthy-path query alone
    (rows / its summed trigger time): the single-sink ceiling.
